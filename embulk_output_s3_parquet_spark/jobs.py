@@ -181,6 +181,27 @@ def _record_write_order(table: EncodedTable, cluster: tuple, zorder: bool) -> No
         table.set_property("write-order-zorder", bool(zorder))
 
 
+def _check_plan_layout(table: EncodedTable, plan, resuming: bool) -> None:
+    """Guard a resume against a planner change. Part ids of a lane-planned
+    wave name the rows the layout put there; a wave planned under another
+    layout (or before layouts were recorded) names different rows by the
+    same ids, so resuming it would silently skip and duplicate rows --
+    refuse loudly, like the ``direct-input-fingerprint`` guard."""
+    if plan.layout is None:
+        return
+    recorded = table.properties().get("plan-layout")
+    if recorded == plan.layout:
+        return
+    if resuming:
+        raise ConfigException(
+            f"resume refused: {table.path} has parts in this wave's id range "
+            f"planned under layout {recorded or 'unrecorded'!r}, but this "
+            f"engine plans {plan.layout!r}; re-encode with if_exists='delete' "
+            "or append at a fresh part_base"
+        )
+    table.set_property("plan-layout", plan.layout)
+
+
 def encode_job(
     spark: SparkSession,
     df: DataFrame,
@@ -243,6 +264,12 @@ def encode_job(
     table = EncodedTable.create(table_path, df.schema, policy, if_exists=if_exists)
     bucket = _resolve_bucket_by(table, bucket_by, df.schema)
     dfp, plan = _plan(df, policy, bucket=bucket)
+    # retired ids (delete_job tombstones) count as done: a replayed stream
+    # micro-batch / resumed wave must not resurrect their original rows.
+    # Only ids inside this plan's range can match one of its rows.
+    done = table.completed_parts() | table.retired_parts()
+    done_here = sorted(p for p in done if part_base <= p < part_base + plan.n_parts)
+    _check_plan_layout(table, plan, bool(done_here))
     if part_base:
         dfp = dfp.withColumn("part_id", (F.col("part_id") + F.lit(part_base)).cast("long"))
     _record_write_order(table, cluster, zorder)
@@ -254,11 +281,8 @@ def encode_job(
     if plan.n_parts:
         table.note_part_extent(part_base + plan.n_parts - 1)
 
-    # retired ids (delete_job tombstones) count as done: a replayed stream
-    # micro-batch / resumed wave must not resurrect their original rows
-    done = table.completed_parts() | table.retired_parts()
-    if done:
-        done_df = spark.createDataFrame([(p,) for p in sorted(done)], "part_id long")
+    if done_here:
+        done_df = spark.createDataFrame([(p,) for p in done_here], "part_id long")
         dfp = dfp.join(F.broadcast(done_df), "part_id", "left_anti")
     if max_parts is not None:
         todo = sorted(set(range(part_base, part_base + plan.n_parts)) - done)[:max_parts]

@@ -2,8 +2,10 @@
 
 The reference is embarrassingly parallel with whatever task split Embulk
 hands it (reference S3ParquetOutputPlugin.scala:29-31,84-98) -- no balancing,
-no skew handling. At 10^12-file scale the corpus keys (repo, lang) are
-Zipf-skewed, so the engine plans its own partitions:
+no skew handling. The engine plans its own partitions, two ways.
+
+Corpus tables (``assign_partitions``): the keys (repo, lang) are
+Zipf-skewed at 10^12-file scale, so
 
 1. aggregate bytes per (lang, repo) group -- a small shuffle of (group, sum)
    pairs, never the data;
@@ -17,6 +19,11 @@ Zipf-skewed, so the engine plans its own partitions:
    across them by xxhash64(path, commit) -- explicit hot-key salting;
 5. rows get `part_id = lang_base + start_bin + pmod(hash, splits)` via a
    broadcast join of the (lang, repo) plan back onto the data.
+
+Other tables are planned in *lanes* (``_assign_lanes``): a lane is the
+first column's hash mod 16, or the bucket id, and splits into
+``ceil(lane bytes / target)`` bins by a hash of the whole row -- one
+aggregate of <= 16 (or N) totals, no group table, no join.
 
 Everything is deterministic for a given input, which is what makes the
 checkpoint manifest's part_ids stable across resume runs.
@@ -45,19 +52,30 @@ DRIVER_PLAN_MAX_GROUPS = int(
     os.environ.get("SPARK_GRAFT_PLAN_DRIVER_GROUPS", "262144")
 )
 
+LANE_LAYOUT = "lanes-v1"  # ``plan-layout`` table property of lane plans
+
+# byte width of a non-null fixed-width value in the lane planners' weight
+_FIXED_WIDTH = {
+    T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4,
+    T.FloatType: 4, T.DateType: 4, T.LongType: 8, T.DoubleType: 8,
+    T.TimestampType: 8, T.TimestampNTZType: 8,
+}
+
 
 @dataclass
 class PartitionPlan:
     n_parts: int
-    groups: DataFrame  # lang, repo, gbytes, start_part, splits (driver-reusable)
+    # corpus planner only: lang, repo, gbytes, start_part, splits
+    groups: DataFrame | None = None
     # bucketed plans only: {bucket: (first_part_id, one_past_last)} -- part
     # ids within one bucket are contiguous, ranges across buckets disjoint
     bucket_ranges: dict[int, tuple[int, int]] | None = None
+    # lane planners only: encode_job records it and refuses to resume a
+    # wave planned under another layout (same ids, different rows)
+    layout: str | None = None
 
 
 def _contains_map(dt) -> bool:
-    from pyspark.sql import types as T
-
     if isinstance(dt, T.MapType):
         return True
     if isinstance(dt, T.ArrayType):
@@ -82,17 +100,12 @@ def assign_partitions(
     group_keys: tuple[str, str] = ("lang", "repo"),
     salt_keys: tuple[str, ...] = ("path", "commit"),
     weight_col: str = "content",
-    weight_expr=None,
 ) -> tuple[DataFrame, PartitionPlan]:
     """Return (df + part_id column, plan). Deterministic for a given input."""
     k1, k2 = group_keys
     g1 = F.coalesce(F.col(k1).cast("string"), F.lit("\x00null"))
     g2 = F.coalesce(F.col(k2).cast("string"), F.lit("\x00null"))
-    weight = (
-        weight_expr
-        if weight_expr is not None
-        else F.coalesce(F.length(F.col(weight_col)).cast("long"), F.lit(0)) + F.lit(64)
-    )
+    weight = F.coalesce(F.length(F.col(weight_col)).cast("long"), F.lit(0)) + F.lit(64)
 
     sizes = (
         df.select(g1.alias(k1), g2.alias(k2), weight.alias("w"))
@@ -233,6 +246,55 @@ def assign_partitions(
     return out, PartitionPlan(n_parts=n_parts, groups=groups)
 
 
+def _row_weight(df: DataFrame):
+    """Per-row byte weight of the lane planners: fixed-width primitives
+    count their width when non-null, string/binary their octet length, the
+    rest (decimal, array, struct, map) its text or JSON rendering -- map
+    casts to string are prohibited under ANSI; every row adds 16."""
+    terms = []
+    for f in df.schema.fields:
+        c, width = F.col(f.name), _FIXED_WIDTH.get(type(f.dataType))
+        if width is not None:
+            terms.append(F.when(c.isNotNull(), F.lit(width)).otherwise(F.lit(0)))
+            continue
+        if not isinstance(f.dataType, (T.StringType, T.BinaryType)):
+            c = F.to_json(c) if _contains_map(f.dataType) else c.cast("string")
+        terms.append(F.coalesce(F.octet_length(c), F.lit(0)))
+    return sum(terms, F.lit(16)).cast("long")
+
+
+def _assign_lanes(
+    df: DataFrame, lane, target_bytes: int
+) -> tuple[DataFrame, int, dict[int, tuple[int, int]]]:
+    """Lane plan: ONE aggregate collects each lane's byte total (a handful
+    of rows, never data); lanes are laid out in string order of their id
+    with ``max(1, ceil(total / target))`` bins each from a running base,
+    and a row lands on ``base[lane] + pmod(xxhash64(row), bins[lane])``
+    through literal maps -- no group table, no join. Returns the frame
+    with ``part_id``, the part count and ``{lane: (first, one_past_last)}``."""
+    totals = (
+        df.groupBy(lane.alias("lane"))
+        .agg(F.sum(_row_weight(df)).alias("b"))
+        .collect()
+    )
+    ranges: dict[int, tuple[int, int]] = {}
+    base = 0
+    # string order: where every lane fits in one bin, tables keep the part
+    # ids the (lane, row-hash) group packer gave them
+    for r in sorted(totals, key=lambda r: str(r["lane"])):
+        bins = max(1, -(-int(r["b"]) // target_bytes))
+        ranges[int(r["lane"])] = (base, base + bins)
+        base += bins
+    part_id = F.lit(0)  # empty input: no lanes, no rows to place
+    if ranges:
+        def by_lane(f):  # literal {lane: f(range)} map, looked up per row
+            return F.create_map(*[F.lit(x) for k, v in ranges.items() for x in (k, f(v))])[lane]
+
+        salt = F.xxhash64(*[_hash_safe(df, c) for c in df.columns])
+        part_id = by_lane(lambda v: v[0]) + F.pmod(salt, by_lane(lambda v: v[1] - v[0]))
+    return df.withColumn("part_id", part_id.cast("long")), max(base, 1), ranges
+
+
 def assign_partitions_bucketed(
     df: DataFrame,
     bucket_col: str,
@@ -242,94 +304,29 @@ def assign_partitions_bucketed(
     """Bucket-major partition plan (Iceberg ``bucket(N, col)`` transform):
     every row lands in bucket ``pmod(xxhash64(col), N)``, every part holds
     rows of exactly ONE bucket, and each bucket's part ids are a contiguous
-    disjoint range (recorded in ``plan.bucket_ranges``). Within a bucket,
-    parts stay byte-balanced and hot surrogate groups salt-split exactly
-    like the generic planner, so a skewed key column cannot produce a
-    monster part -- it produces more parts in its bucket.
+    disjoint range (recorded in ``plan.bucket_ranges``). The bucket is the
+    lane: a bucket gets ``ceil(bytes / target)`` parts and its rows salt
+    across them by a hash of the whole row, so a skewed key column cannot
+    produce a monster part -- it produces more parts in its bucket.
 
     The point of the layout is the shuffle-free bucketed equi-join
     (``operators.bucketjoin``): two tables bucketed ``(key, N)`` with the
     same N can be joined bucket-by-bucket reading only local parts --
     Spark's storage-partitioned join, expressed over the engine's own
     metadata."""
-    cols = [_hash_safe(df, c) for c in df.columns]
-    weight = sum(
-        (
-            F.coalesce(
-                F.octet_length(
-                    c
-                    if _contains_map(df.schema[n].dataType)
-                    else F.col(n).cast("string")
-                ),
-                F.lit(0),
-            )
-            for n, c in zip(df.columns, cols)
-        ),
-        F.lit(16),
-    )
-    # string bucket key because assign_partitions coalesces k1 to string;
     # xxhash64 of a NULL key is the seed hash -> all null-key rows share one
     # deterministic bucket (equi-joins never match them anyway)
-    bkt = F.pmod(
-        F.xxhash64(_hash_safe(df, bucket_col)), F.lit(n_buckets)
-    ).cast("string")
-    aug = df.withColumn("__bkt", bkt).withColumn(
-        "__sgk2", F.pmod(F.xxhash64(*cols), F.lit(512)).cast("string")
-    )
-    out, plan = assign_partitions(
-        aug,
-        target_bytes=target_bytes,
-        group_keys=("__bkt", "__sgk2"),
-        salt_keys=tuple(df.columns),
-        weight_expr=weight.cast("long"),
-    )
-    ranges = (
-        plan.groups.groupBy("__bkt")
-        .agg(
-            F.min("start_part").alias("lo"),
-            F.max(F.col("start_part") + F.col("splits")).alias("hi"),
-        )
-        .collect()  # <= n_buckets rows, never data
-    )
-    plan.bucket_ranges = {
-        int(r["__bkt"]): (int(r["lo"]), int(r["hi"])) for r in ranges
-    }
-    return out.drop("__bkt", "__sgk2"), plan
+    bkt = F.pmod(F.xxhash64(_hash_safe(df, bucket_col)), F.lit(n_buckets)).cast("int")
+    out, n_parts, ranges = _assign_lanes(df, bkt, target_bytes)
+    return out, PartitionPlan(n_parts=n_parts, bucket_ranges=ranges, layout=LANE_LAYOUT)
 
 
 def assign_partitions_generic(
     df: DataFrame, target_bytes: int = 64 * 1024 * 1024
 ) -> tuple[DataFrame, PartitionPlan]:
-    """Partition planning for tables WITHOUT the corpus key columns.
-
-    Surrogate group keys are bounded-cardinality hashes of the row (so the
-    group table stays collectable at any scale) and the byte weight is the
-    octet length of all columns rendered to text -- still deterministic,
-    byte-balanced, and salt-split on hot surrogate groups."""
-    cols = [_hash_safe(df, c) for c in df.columns]
-    weight = sum(
-        (
-            F.coalesce(
-                F.octet_length(
-                    # map-to-string casts are also prohibited under ANSI;
-                    # the JSON rendering doubles as the byte weight there
-                    c if _contains_map(df.schema[n].dataType) else F.col(n).cast("string")
-                ),
-                F.lit(0),
-            )
-            for n, c in zip(df.columns, cols)
-        ),
-        F.lit(16),
-    )
-    aug = (
-        df.withColumn("__sgk1", F.pmod(F.xxhash64(cols[0]), F.lit(16)).cast("string"))
-        .withColumn("__sgk2", F.pmod(F.xxhash64(*cols), F.lit(4096)).cast("string"))
-    )
-    out, plan = assign_partitions(
-        aug,
-        target_bytes=target_bytes,
-        group_keys=("__sgk1", "__sgk2"),
-        salt_keys=tuple(df.columns),
-        weight_expr=weight.cast("long"),
-    )
-    return out.drop("__sgk1", "__sgk2"), plan
+    """Partition planning for tables WITHOUT the corpus key columns: the
+    lane is ``pmod(xxhash64(first column), 16)``, and each lane splits into
+    byte-balanced bins by a hash of the whole row (see ``_assign_lanes``)."""
+    lane = F.pmod(F.xxhash64(_hash_safe(df, df.columns[0])), F.lit(16)).cast("int")
+    out, n_parts, _ranges = _assign_lanes(df, lane, target_bytes)
+    return out, PartitionPlan(n_parts=n_parts, layout=LANE_LAYOUT)
