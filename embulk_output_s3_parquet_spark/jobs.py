@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .operators.decode import decode_chunks
+from .operators.decode import decode_chunks, map_units, part_slices
 from .operators.encode import encode_grouped, encode_local
 from .plans.partitioning import assign_partitions, assign_partitions_generic
 from .plans.policy import CodecPolicy, ConfigException
@@ -481,15 +481,11 @@ def count_job(
     touches O(boundary) payload bytes instead of the whole column.
 
     Distributed the same way as decode_table_scan: part dirs (tiny strings)
-    fan out to tasks, per-part counts sum on the driver -- the only data
-    that moves is one long per part."""
-    from pyspark.sql import functions as F
-
-    from .sources.chunkscan import normalize_where
-
+    fan out to tasks, per-task counts sum on the driver -- the only data
+    that moves is one long per task."""
     import os
 
-    from .sources.chunkscan import conjunct_state_of
+    from .sources.chunkscan import conjunct_state_of, normalize_where
 
     table = EncodedTable(table_path)
     at_gen = table.resolve_ref(at_gen)  # tag name | gen | None
@@ -508,7 +504,7 @@ def count_job(
     # neither gets a task. COUNT(*) with no predicate is a pure driver-side
     # lineage sum (no Spark job at all).
     total = 0
-    dirs = []
+    dirs, weights = [], []
     fillable = frozenset(table.added_columns())
     aliases = table.stored_aliases()
     # merge-on-read delete vectors: decided counts shrink by the recorded
@@ -523,8 +519,6 @@ def count_job(
     admitted = (
         table.surviving_parts(conjuncts, spark=spark) if conjuncts and at_gen is None else None
     )
-    import json as _json
-
     for pid in sorted(lineage):
         row = lineage[pid]
         dv_n = int(dv_all.get(pid, {}).get("n", 0))
@@ -545,39 +539,32 @@ def count_job(
             total += int(row["rows"]) - dv_n
             continue
         dirs.append(
-            (
-                os.path.join(table.data_dir, f"part_id={pid}"),
-                _json.dumps(dv_all[pid]) if pid in dv_all else "",
-            )
+            (os.path.join(table.data_dir, f"part_id={pid}"), dv_all.get(pid))
         )
+        weights.append(int(row.get("enc_bytes", 0)))
     if not dirs:
         return total
-    par = min(len(dirs), spark.sparkContext.defaultParallelism * 2)
-    path_df = spark.createDataFrame(dirs, "dir string, dv string").repartition(par)
 
-    def cnt(it):
+    def cnt(units):
         import glob as _glob
-        import json as _j
         import os as _os
+
+        import pandas as pd
 
         from embulk_output_s3_parquet_spark.sources.chunkscan import count_file
 
-        for pdf in it:
-            n = 0
-            for d, dv_json in zip(pdf["dir"], pdf["dv"]):
-                files = sorted(_glob.glob(_os.path.join(d, "*.parquet")))
-                if not files:
-                    raise FileNotFoundError(f"committed part missing: {d}")
-                dv = _j.loads(dv_json) if dv_json else None
-                for f in files:
-                    n += count_file(
-                        f, conjuncts, fillable=fillable, aliases=aliases, dv=dv
-                    )
-            import pandas as pd
+        n = 0
+        for d, dv in units:
+            files = sorted(_glob.glob(_os.path.join(d, "*.parquet")))
+            if not files:
+                raise FileNotFoundError(f"committed part missing: {d}")
+            for f in files:
+                n += count_file(
+                    f, conjuncts, fillable=fillable, aliases=aliases, dv=dv
+                )
+        yield pd.DataFrame({"n": [n]})
 
-            yield pd.DataFrame({"n": [n]})
-
-    out = path_df.mapInPandas(cnt, schema="n long")
+    out = map_units(spark, dirs, weights, cnt, "n long")
     return total + int(out.agg(F.sum("n")).first()[0] or 0)
 
 
@@ -600,14 +587,11 @@ def _stats_scan(
     with no task; (3) inside surviving parts, minmax_file decodes only
     boundary chunks (masked by the undecided conjuncts) and chunks whose
     metadata lacks the needed stat. Like count_job, the only thing
-    shuffled is one JSON line per surviving part."""
+    collected is one JSON line per task."""
     import json as _json
     import os
 
-    from .sources.chunkscan import (
-        conjunct_state_of,
-        normalize_where,
-    )
+    from .sources.chunkscan import conjunct_state_of, fold_stat, normalize_where
 
     table = EncodedTable(table_path)
     at_gen = table.resolve_ref(at_gen)  # tag name | gen | None
@@ -632,30 +616,12 @@ def _stats_scan(
         c: {"t": "", "mm": None, "sm": None, "nn": 0} for c in columns
     }
 
-    def fold(col: str, tname: str, mm, sm=None, nn: int = 0) -> None:
-        cur = acc[col]
-        if not cur["t"] and tname:
-            cur["t"] = tname
-        if mm is not None:
-            cur["mm"] = (
-                list(mm)
-                if cur["mm"] is None
-                else merge_zone(cur["t"] or tname, cur["mm"], list(mm))
-            )
-        if sm is not None:
-            cur["sm"] = (
-                sm
-                if cur["sm"] is None
-                else merge_sum(cur["t"] or tname, cur["sm"], sm)
-            )
-        cur["nn"] += int(nn)
-
     # same at_gen caveat as count_job: the bloom-sidecar shortcut knows only
     # the CURRENT part set, so snapshot reads rely on the zone tri-state
     admitted = (
         table.surviving_parts(conjuncts, spark=spark) if conjuncts and at_gen is None else None
     )
-    dirs = []
+    dirs, weights = [], []
     for pid in sorted(lineage):
         row = lineage[pid]
         zones = row.get("zones", {})
@@ -687,17 +653,16 @@ def _stats_scan(
                         unresolved_cols.append(c)
                     continue  # added column: all-null in this part
                 if int(e.get("z", 0)) >= int(e.get("n", 0)):
-                    fold(c, e.get("t", ""), None)
+                    fold_stat(acc, c, {"t": e.get("t", "")})
                 elif e.get("mm") is not None and (
                     not sums or e.get("sm") is not None
                 ):
-                    fold(
-                        c,
-                        e.get("t", ""),
-                        e["mm"],
-                        sm=e.get("sm") if sums else None,
-                        nn=int(e.get("n", 0)) - int(e.get("z", 0)),
-                    )
+                    fold_stat(acc, c, {
+                        "t": e.get("t", ""),
+                        "mm": e["mm"],
+                        "sm": e.get("sm") if sums else None,
+                        "nn": int(e.get("n", 0)) - int(e.get("z", 0)),
+                    })
                 else:
                     unresolved_cols.append(c)
         if boundary or unresolved_cols:
@@ -705,19 +670,16 @@ def _stats_scan(
                 (
                     os.path.join(table.data_dir, f"part_id={pid}"),
                     bool(boundary),
-                    ",".join(columns if boundary else unresolved_cols),
-                    _json.dumps(dv_all[pid]) if pid in dv_all else "",
+                    columns if boundary else unresolved_cols,
+                    dv_all.get(pid),
                 )
             )
+            weights.append(int(row.get("enc_bytes", 0)))
     if dirs:
-        par = min(len(dirs), spark.sparkContext.defaultParallelism * 2)
-        path_df = spark.createDataFrame(
-            dirs, "dir string, boundary boolean, cols string, dv string"
-        ).repartition(par)
         cjs = conjuncts
         want_sums = sums
 
-        def mm_task(it):
+        def mm_task(units):
             import glob as _glob
             import json as _j
             import os as _os
@@ -725,51 +687,28 @@ def _stats_scan(
             import pandas as pd
 
             from embulk_output_s3_parquet_spark.sources.chunkscan import (
-                merge_sum as _ms,
-                merge_zone as _mz,
+                fold_stat as _fold,
                 minmax_file,
             )
 
-            for pdf in it:
-                out: dict[str, dict] = {}
-                for d, bd, cs, dv_json in zip(
-                    pdf["dir"], pdf["boundary"], pdf["cols"], pdf["dv"]
-                ):
-                    files = sorted(_glob.glob(_os.path.join(d, "*.parquet")))
-                    if not files:
-                        raise FileNotFoundError(f"committed part missing: {d}")
-                    dv = _j.loads(dv_json) if dv_json else None
-                    for f in files:
-                        got = minmax_file(
-                            f, cjs if bd else [], cs.split(","),
-                            fillable=fillable, sums=want_sums,
-                            aliases=aliases, dv=dv,
-                        )
-                        for c, e in got.items():
-                            cur = out.get(c)
-                            if cur is None:
-                                out[c] = dict(e)
-                                continue
-                            t = cur["t"] or e["t"]
-                            if e.get("mm") is not None:
-                                cur["mm"] = (
-                                    list(e["mm"])
-                                    if cur["mm"] is None
-                                    else _mz(t, cur["mm"], e["mm"])
-                                )
-                            if e.get("sm") is not None:
-                                cur["sm"] = (
-                                    e["sm"]
-                                    if cur["sm"] is None
-                                    else _ms(t, cur["sm"], e["sm"])
-                                )
-                            cur["nn"] = cur.get("nn", 0) + e.get("nn", 0)
-                            cur["t"] = t
-                yield pd.DataFrame({"j": [_j.dumps(out)]})
+            out: dict[str, dict] = {}
+            for d, bd, cs, dv in units:
+                files = sorted(_glob.glob(_os.path.join(d, "*.parquet")))
+                if not files:
+                    raise FileNotFoundError(f"committed part missing: {d}")
+                for f in files:
+                    got = minmax_file(
+                        f, cjs if bd else [], cs,
+                        fillable=fillable, sums=want_sums,
+                        aliases=aliases, dv=dv,
+                    )
+                    for c, e in got.items():
+                        _fold(out, c, e)
+            yield pd.DataFrame({"j": [_j.dumps(out)]})
 
-        for (blob,) in path_df.mapInPandas(mm_task, schema="j string").collect():
+        for (blob,) in map_units(spark, dirs, weights, mm_task, "j string").collect():
             for c, e in _json.loads(blob).items():
-                fold(c, e.get("t", ""), e.get("mm"), sm=e.get("sm"), nn=e.get("nn", 0))
+                fold_stat(acc, c, e)
     return acc
 
 
@@ -1794,7 +1733,9 @@ def rewrite_small_parts(
                 cur, acc = [], 0
         if cur:
             groups.append(cur)
-    new_lineage = _merge_parts_local(spark, table, groups, selected, policy)
+    new_lineage = _local_parts_rewrite(
+        spark, table, lineage, groups, selected, [], policy
+    )
     report["parts_rewritten"] = len(selected)
     report["parts_written"] = len(new_lineage)
     report["bytes_written"] = sum(
@@ -2185,7 +2126,7 @@ def delete_job(
         "rows_deleted": 0,
     }
     if mode == "mor":
-        return _delete_mor(spark, table, conjuncts, affected, report)
+        return _delete_mor(spark, table, lineage, conjuncts, affected, report)
     if not affected:
         return report
     rows_before = sum(lineage[p]["rows"] for p in affected)
@@ -2194,7 +2135,9 @@ def delete_job(
         int(dv_before[p].get("n", 0)) for p in affected if p in dv_before
     )
 
-    new_lineage = _delete_cow_inplace(spark, table, conjuncts, affected, policy)
+    new_lineage = _delete_cow_inplace(
+        spark, table, lineage, conjuncts, affected, policy
+    )
     rows_after = sum(r["rows"] for r in new_lineage.values())
     report["parts_rewritten"] = len(new_lineage)
     report["rows_deleted"] = rows_before - rows_after
@@ -2205,6 +2148,7 @@ def delete_job(
 def _delete_cow_inplace(
     spark: SparkSession,
     table: EncodedTable,
+    lineage: dict[int, dict],
     conjuncts: list[tuple],
     affected: set[int],
     policy: CodecPolicy | None,
@@ -2237,42 +2181,26 @@ def _delete_cow_inplace(
     # loud literal validation (raises ConfigException on e.g. raw epoch
     # ints against temporal columns), exactly as the Spark-filter path did
     _conjunct_condition(conjuncts, table.schema())
-    lineage = table.lineage()
-    groups = [
-        ([pid], lineage[pid].get("bucket")) for pid in sorted(affected)
-    ]
     return _local_parts_rewrite(
-        spark, table, groups, affected, conjuncts, policy
+        spark, table, lineage, [[p] for p in sorted(affected)], affected,
+        conjuncts, policy,
     )
-
-
-def _merge_parts_local(
-    spark: SparkSession,
-    table: EncodedTable,
-    groups: list[list[int]],
-    selected: set[int],
-    policy: CodecPolicy | None,
-) -> dict[int, dict]:
-    """Fused task-local compaction: each group of small parts merges into
-    ONE part written in place by its task (see _delete_cow_inplace for
-    the shape and why). Groups are bin-packed per bucket on the driver
-    from lineage byte counts, so bucket purity is preserved."""
-    lineage = table.lineage()
-    gs = [(pids, lineage[pids[0]].get("bucket")) for pids in groups]
-    return _local_parts_rewrite(spark, table, gs, selected, [], policy)
 
 
 def _local_parts_rewrite(
     spark: SparkSession,
     table: EncodedTable,
-    groups: list[tuple[list[int], object]],
+    lineage: dict[int, dict],
+    groups: list[list[int]],
     affected: set[int],
     conjuncts: list[tuple],
     policy: CodecPolicy | None,
 ) -> dict[int, dict]:
-    """Shared fused rewrite core (r6): ``groups`` is a list of
-    ([old part ids], bucket_tag_or_None); each group becomes one task that
-    decodes its parts with pyarrow (delete vectors applied), optionally
+    """Shared fused rewrite core (r6): ``groups`` is a list of old part
+    id lists; each group becomes one new part (tagged with its first
+    part's bucket, read from ``lineage``, which also weighs the groups
+    for task packing). A task decodes its groups' parts with pyarrow
+    (delete vectors applied), optionally
     drops rows matching ``conjuncts`` (NULL predicate = kept, see
     _delete_cow_inplace), re-applies the recorded write-order, re-encodes
     through the chunk kernels, writes one (col, chunk_seq)-sorted chunk
@@ -2316,26 +2244,23 @@ def _local_parts_rewrite(
     work = [
         (
             int(offset + i),
-            _json.dumps(
+            [
                 [
-                    [
-                        os.path.join(table.data_dir, f"part_id={pid}"),
-                        dv_all.get(pid) or None,
-                    ]
-                    for pid in pids
+                    os.path.join(table.data_dir, f"part_id={pid}"),
+                    dv_all.get(pid) or None,
                 ]
-            ),
-            -1 if bucket is None else int(bucket),
+                for pid in pids
+            ],
+            lineage[pids[0]].get("bucket"),
         )
-        for i, (pids, bucket) in enumerate(groups)
+        for i, pids in enumerate(groups)
     ]
-    par = min(len(work), spark.sparkContext.defaultParallelism * 2)
-    src = spark.createDataFrame(
-        work, "new_pid long, dirs string, bucket int"
-    ).repartition(par)
+    weights = [
+        sum(int(lineage[p].get("enc_bytes", 0)) for p in pids) for pids in groups
+    ]
     cjs = conjuncts
 
-    def rewrite(it):
+    def rewrite(units):
         import glob as _glob
         import uuid as _uuid
 
@@ -2354,91 +2279,90 @@ def _local_parts_rewrite(
             iter_part_tables,
         )
 
-        for pdf in it:
-            out_rows = []
-            for new_pid, dirs_json, bucket in zip(
-                pdf["new_pid"], pdf["dirs"], pdf["bucket"]
-            ):
-                tw0 = time.time()
-                tables = []
-                for d, dv in _json.loads(dirs_json):
-                    files = sorted(_glob.glob(os.path.join(d, "*.parquet")))
-                    if not files:
-                        raise FileNotFoundError(f"committed part missing: {d}")
-                    tables.extend(
-                        iter_part_tables(
-                            files, fields, [], fillable=fillable,
-                            aliases=aliases, dv=dv,
-                        )
+        out_rows = []
+        for new_pid, dirs, bucket in units:
+            tw0 = time.time()
+            tables = []
+            for d, dv in dirs:
+                files = sorted(_glob.glob(os.path.join(d, "*.parquet")))
+                if not files:
+                    raise FileNotFoundError(f"committed part missing: {d}")
+                tables.extend(
+                    iter_part_tables(
+                        files, fields, [], fillable=fillable,
+                        aliases=aliases, dv=dv,
                     )
-                if not tables:
-                    out_rows.append((int(new_pid), ""))
-                    continue
-                whole = pa.concat_tables(tables).combine_chunks()
-                if cjs:
-                    mask = None
-                    for c, op, v in cjs:
-                        m = _match_mask(whole.column(c).combine_chunks(), op, v)
-                        mask = m if mask is None else pc.and_kleene(mask, m)
-                    # parity with the previous filter(~coalesce(cond,
-                    # False)): a NULL predicate means NOT deleted -- the
-                    # row is kept (same as merge-on-read's fill-false
-                    # marking)
-                    keep = pc.invert(pc.fill_null(mask, False))
-                    whole = whole.filter(keep)
-                if whole.num_rows == 0:
-                    out_rows.append((int(new_pid), ""))
-                    continue
-                if cluster and zorder:
-                    whole = _zorder_take(whole, cluster)
-                elif cluster:
-                    whole = whole.sort_by([(c, "ascending") for c in cluster])
-                eff = _effective_chunk_rows(whole, chunk_rows, chunk_bytes)
-                enc = _encode_slices(
-                    int(new_pid), whole, colmap, eff,
-                    bloom_cols=bloom_cols, ndv_cols=ndv_cols,
                 )
-                enc = enc.drop_columns(["part_id"]).sort_by(
-                    [("col", "ascending"), ("chunk_seq", "ascending")]
-                )
-                part_dir = os.path.join(staging, f"part_id={int(new_pid)}")
-                os.makedirs(part_dir, exist_ok=True)
-                rows_per_group = max(
-                    1,
-                    int(4 * 1024 * 1024 * enc.num_rows // max(enc.nbytes, 1)),
-                )
-                # temp + atomic replace onto a DETERMINISTIC name: a
-                # retried/speculative task re-replaces the same file
-                # instead of leaving two parquet files in one part dir
-                tmp = os.path.join(
-                    part_dir, f".tmp-{_uuid.uuid4().hex[:12]}"
-                )
-                _pq.write_table(
-                    enc, tmp,
-                    row_group_size=rows_per_group,
-                    compression="none",
-                )
-                os.replace(
-                    tmp, os.path.join(part_dir, "part-00000.parquet")
-                )
-                row = lineage_row_from_chunks(
-                    enc.column("chunk_seq").to_pylist(),
-                    enc.column("col").to_pylist(),
-                    enc.column("meta").to_pylist(),
-                    enc.column("payload_sha").to_pylist(),
-                    enc.column("raw_bytes").to_pylist(),
-                    enc.column("enc_bytes").to_pylist(),
-                    enc.column("n").to_pylist(),
-                    first_col,
-                )
-                row["wall_s"] = round(time.time() - tw0, 3)
-                if int(bucket) >= 0:
-                    row["bucket"] = int(bucket)
-                out_rows.append((int(new_pid), _json.dumps(row)))
-            yield pd.DataFrame(out_rows, columns=["new_pid", "lineage"])
+            if not tables:
+                out_rows.append((int(new_pid), ""))
+                continue
+            whole = pa.concat_tables(tables).combine_chunks()
+            if cjs:
+                mask = None
+                for c, op, v in cjs:
+                    m = _match_mask(whole.column(c).combine_chunks(), op, v)
+                    mask = m if mask is None else pc.and_kleene(mask, m)
+                # parity with the previous filter(~coalesce(cond,
+                # False)): a NULL predicate means NOT deleted -- the
+                # row is kept (same as merge-on-read's fill-false
+                # marking)
+                keep = pc.invert(pc.fill_null(mask, False))
+                whole = whole.filter(keep)
+            if whole.num_rows == 0:
+                out_rows.append((int(new_pid), ""))
+                continue
+            if cluster and zorder:
+                whole = _zorder_take(whole, cluster)
+            elif cluster:
+                whole = whole.sort_by([(c, "ascending") for c in cluster])
+            eff = _effective_chunk_rows(whole, chunk_rows, chunk_bytes)
+            enc = _encode_slices(
+                int(new_pid), whole, colmap, eff,
+                bloom_cols=bloom_cols, ndv_cols=ndv_cols,
+            )
+            enc = enc.drop_columns(["part_id"]).sort_by(
+                [("col", "ascending"), ("chunk_seq", "ascending")]
+            )
+            part_dir = os.path.join(staging, f"part_id={int(new_pid)}")
+            os.makedirs(part_dir, exist_ok=True)
+            rows_per_group = max(
+                1,
+                int(4 * 1024 * 1024 * enc.num_rows // max(enc.nbytes, 1)),
+            )
+            # temp + atomic replace onto a DETERMINISTIC name: a
+            # retried/speculative task re-replaces the same file
+            # instead of leaving two parquet files in one part dir
+            tmp = os.path.join(
+                part_dir, f".tmp-{_uuid.uuid4().hex[:12]}"
+            )
+            _pq.write_table(
+                enc, tmp,
+                row_group_size=rows_per_group,
+                compression="none",
+            )
+            os.replace(
+                tmp, os.path.join(part_dir, "part-00000.parquet")
+            )
+            row = lineage_row_from_chunks(
+                enc.column("chunk_seq").to_pylist(),
+                enc.column("col").to_pylist(),
+                enc.column("meta").to_pylist(),
+                enc.column("payload_sha").to_pylist(),
+                enc.column("raw_bytes").to_pylist(),
+                enc.column("enc_bytes").to_pylist(),
+                enc.column("n").to_pylist(),
+                first_col,
+            )
+            row["wall_s"] = round(time.time() - tw0, 3)
+            if bucket is not None:
+                row["bucket"] = int(bucket)
+            out_rows.append((int(new_pid), _json.dumps(row)))
+        yield pd.DataFrame(out_rows, columns=["new_pid", "lineage"])
 
     with staging_heartbeat(staging):
-        got = src.mapInPandas(rewrite, schema="new_pid long, lineage string").collect()
+        got = map_units(
+            spark, work, weights, rewrite, "new_pid long, lineage string"
+        ).collect()
     new_lineage: dict[int, dict] = {}
     for r in got:
         if r["lineage"]:
@@ -2472,6 +2396,7 @@ def _local_parts_rewrite(
 def _delete_mor(
     spark: SparkSession,
     table: EncodedTable,
+    lineage: dict[int, dict],
     conjuncts: list[tuple],
     affected: set[int],
     report: dict,
@@ -2482,7 +2407,7 @@ def _delete_mor(
     flip (zero payload bytes written; crash-before-flip leaves the old
     table intact)."""
     report = {**report, "mode": "mor", "dv_parts": 0}
-    amended, fresh = _mor_mark(spark, table, conjuncts, affected)
+    amended, fresh = _mor_mark(spark, table, lineage, conjuncts, affected)
     report["rows_deleted"] = fresh
     report["dv_parts"] = len(amended)
     if amended:
@@ -2494,6 +2419,7 @@ def _delete_mor(
 def _mor_mark(
     spark: SparkSession,
     table: EncodedTable,
+    lineage: dict[int, dict],
     conjuncts: list[tuple],
     affected: set[int],
     refine: tuple[list[str], list[tuple]] | None = None,
@@ -2517,6 +2443,8 @@ def _mor_mark(
     import json as _json
     import os
 
+    from .sources.tables import SHARD_SIZE
+
     if table._core_manifest().get("parts"):
         raise ConfigException(
             "merge-on-read mutations need sharded lineage; this table uses "
@@ -2535,16 +2463,16 @@ def _mor_mark(
         (
             int(pid),
             os.path.join(table.data_dir, f"part_id={pid}"),
-            _json.dumps(existing.get(pid) or {}),
+            existing.get(pid) or {},
         )
         for pid in sorted(affected)
     ]
-    par = min(len(work), spark.sparkContext.defaultParallelism * 2)
-    src = spark.createDataFrame(work, "part_id long, dir string, dv string")
-    src = src.repartition(par)
+    weights = [
+        int(lineage.get(p, {}).get("enc_bytes", 0)) for p in sorted(affected)
+    ]
     cjs = conjuncts
 
-    def mark(it):
+    def mark(units):
         import numpy as np
         import pandas as pd
         import pyarrow as pa
@@ -2556,92 +2484,93 @@ def _mor_mark(
             scan_file,
         )
 
-        for pdf in it:
-            out_rows = []
-            for pid, d, dv_json in zip(pdf["part_id"], pdf["dir"], pdf["dv"]):
-                old = _json.loads(dv_json)
-                old_keep = dv_masks(old)  # keep-masks (True = live row)
-                chunks: dict = dict((old or {}).get("chunks") or {})
-                new_bits = 0
-                files = sorted(_glob.glob(os.path.join(d, "*.parquet")))
-                if not files:
-                    raise FileNotFoundError(f"committed part missing: {d}")
-                for f in files:
-                    chunk_n: dict = {}
-                    surviving, meta_by, decoded = scan_file(
-                        f, pred_cols, cjs, chunk_n_out=chunk_n,
-                        fillable=fillable, aliases=aliases,
+        out_rows = []
+        for pid, d, old in units:
+            old_keep = dv_masks(old)  # keep-masks (True = live row)
+            chunks: dict = dict((old or {}).get("chunks") or {})
+            new_bits = 0
+            files = sorted(_glob.glob(os.path.join(d, "*.parquet")))
+            if not files:
+                raise FileNotFoundError(f"committed part missing: {d}")
+            for f in files:
+                chunk_n: dict = {}
+                surviving, meta_by, decoded = scan_file(
+                    f, pred_cols, cjs, chunk_n_out=chunk_n,
+                    fillable=fillable, aliases=aliases,
+                )
+                for seq in surviving:
+                    mask = None
+                    for c, op, v in cjs:
+                        arr = decoded.get(c, {}).get(seq)
+                        if arr is None:
+                            if c in fillable:
+                                # added column, part predates it: the
+                                # column is all-null here -- evaluate
+                                # the op against nulls (isnull matches
+                                # every row; value ops match none)
+                                arr = pa.nulls(chunk_n[seq])
+                            else:
+                                raise ValueError(
+                                    f"chunk {seq} of {f} is missing "
+                                    f"predicate column {c!r}"
+                                )
+                        m = _match_mask(arr, op, v)
+                        mask = m if mask is None else pc.and_kleene(mask, m)
+                    if mask is None:  # no conjuncts can't happen (guarded)
+                        continue
+                    matched = pc.fill_null(mask, False).to_numpy(
+                        zero_copy_only=False
+                    ).astype(bool)
+                    if refine_cols and matched.any():
+                        # exact composite-key membership: per-column
+                        # conjuncts admitted the cross product; keep
+                        # only rows whose key TUPLE is in the source
+                        key_arrs = []
+                        for c in refine_cols:
+                            a = decoded.get(c, {}).get(seq)
+                            if a is None:  # added col, pre-addition part
+                                a = pa.nulls(chunk_n[seq])
+                            key_arrs.append(a.to_pandas())
+                        mi = pd.MultiIndex.from_arrays(key_arrs)
+                        matched &= np.asarray(mi.isin(refine_keys))
+                    prior_keep = old_keep.get(seq)
+                    prior_del = (
+                        ~prior_keep[: len(matched)]
+                        if prior_keep is not None
+                        else np.zeros(len(matched), bool)
                     )
-                    for seq in surviving:
-                        mask = None
-                        for c, op, v in cjs:
-                            arr = decoded.get(c, {}).get(seq)
-                            if arr is None:
-                                if c in fillable:
-                                    # added column, part predates it: the
-                                    # column is all-null here -- evaluate
-                                    # the op against nulls (isnull matches
-                                    # every row; value ops match none)
-                                    arr = pa.nulls(chunk_n[seq])
-                                else:
-                                    raise ValueError(
-                                        f"chunk {seq} of {f} is missing "
-                                        f"predicate column {c!r}"
-                                    )
-                            m = _match_mask(arr, op, v)
-                            mask = m if mask is None else pc.and_kleene(mask, m)
-                        if mask is None:  # no conjuncts can't happen (guarded)
-                            continue
-                        matched = pc.fill_null(mask, False).to_numpy(
-                            zero_copy_only=False
-                        ).astype(bool)
-                        if refine_cols and matched.any():
-                            # exact composite-key membership: per-column
-                            # conjuncts admitted the cross product; keep
-                            # only rows whose key TUPLE is in the source
-                            key_arrs = []
-                            for c in refine_cols:
-                                a = decoded.get(c, {}).get(seq)
-                                if a is None:  # added col, pre-addition part
-                                    a = pa.nulls(chunk_n[seq])
-                                key_arrs.append(a.to_pandas())
-                            mi = pd.MultiIndex.from_arrays(key_arrs)
-                            matched &= np.asarray(mi.isin(refine_keys))
-                        prior_keep = old_keep.get(seq)
-                        prior_del = (
-                            ~prior_keep[: len(matched)]
-                            if prior_keep is not None
-                            else np.zeros(len(matched), bool)
-                        )
-                        fresh = matched & ~prior_del
-                        if not fresh.any():
-                            continue
-                        new_bits += int(fresh.sum())
-                        union = matched | prior_del
-                        chunks[str(seq)] = {
-                            "n": int(union.sum()),
-                            "bm": base64.b64encode(
-                                np.packbits(union).tobytes()
-                            ).decode(),
-                        }
-                if new_bits:
-                    total = sum(int(e["n"]) for e in chunks.values())
-                    out_rows.append(
-                        (int(pid), new_bits,
-                         _json.dumps({"n": total, "chunks": chunks}))
-                    )
-            yield pd.DataFrame(
-                out_rows, columns=["part_id", "fresh", "dv"]
-            ) if out_rows else pd.DataFrame(
-                {"part_id": pd.Series([], dtype="int64"),
-                 "fresh": pd.Series([], dtype="int64"),
-                 "dv": pd.Series([], dtype="object")}
-            )
+                    fresh = matched & ~prior_del
+                    if not fresh.any():
+                        continue
+                    new_bits += int(fresh.sum())
+                    union = matched | prior_del
+                    chunks[str(seq)] = {
+                        "n": int(union.sum()),
+                        "bm": base64.b64encode(
+                            np.packbits(union).tobytes()
+                        ).decode(),
+                    }
+            if new_bits:
+                total = sum(int(e["n"]) for e in chunks.values())
+                out_rows.append(
+                    (int(pid), new_bits,
+                     _json.dumps({"n": total, "chunks": chunks}))
+                )
+        yield pd.DataFrame(
+            out_rows, columns=["part_id", "fresh", "dv"]
+        ) if out_rows else pd.DataFrame(
+            {"part_id": pd.Series([], dtype="int64"),
+             "fresh": pd.Series([], dtype="int64"),
+             "dv": pd.Series([], dtype="object")}
+        )
 
-    got = src.mapInPandas(mark, schema="part_id long, fresh long, dv string").collect()
+    got = map_units(
+        spark, work, weights, mark, "part_id long, fresh long, dv string"
+    ).collect()
     if not got:
         return {}, 0
-    full = table.lineage_full()
+    marked = {int(r["part_id"]) for r in got}
+    full = table.lineage_full(shards={p // SHARD_SIZE for p in marked})
     amended: dict[int, dict] = {}
     fresh_total = 0
     for r in got:
@@ -2824,7 +2753,9 @@ def update_job(
         # the updated images of MATCHED rows only; unmatched rows stay in
         # their (vector-masked-where-needed) original parts untouched
         updated = df.filter(cond).select(*cols)
-        amended, _fresh = _mor_mark(spark, table, conjuncts, affected)
+        amended, _fresh = _mor_mark(
+            spark, table, lineage, conjuncts, affected
+        )
         new_lineage = _swap_in_rewrite(
             spark, table, affected, updated, policy,
             keep_affected=True, extra_rows=amended,
@@ -3003,7 +2934,10 @@ def merge_job(
         # vector the superseded images IN PLACE, append the new images:
         # one atomic flip (keep_affected -- the vectored parts stay live)
         amended, _fresh = (
-            _mor_mark(spark, table, mark_conjuncts, affected, refine=refine)
+            _mor_mark(
+                spark, table, lineage, mark_conjuncts, affected,
+                refine=refine,
+            )
             if affected and mark_conjuncts
             else ({}, 0)
         )
@@ -3165,33 +3099,18 @@ def export_job(
             os.unlink(os.path.join(out_dir, e))
     os.makedirs(out_dir, exist_ok=True)
 
-    cores = spark.sparkContext.defaultParallelism
-    n_parts = len(lineage)
-    # sub-part fan-out, same shape as decode_table_scan: with fewer parts
-    # than cores, split each part's chunk list into n_sub contiguous slices
-    # (each slice writes its own output file) so export parallelism tracks
-    # the cluster; at scale (parts >> cores) n_sub stays 1
-    n_sub = max(1, min(-(-cores // n_parts), 16)) if n_parts < cores else 1
-    import json as _json
-
+    # sub-part slices as in decode_table_scan; each writes its own file
     dv_all = table.part_dv(gen=at_gen) if at_gen is not None else table.part_dv()
+    slices = part_slices(
+        sorted(lineage), lineage, spark.sparkContext.defaultParallelism
+    )
     work = [
-        (
-            pid,
-            os.path.join(table.data_dir, f"part_id={pid}"),
-            i,
-            n_sub,
-            _json.dumps(dv_all[pid]) if pid in dv_all else "",
-        )
-        for pid in sorted(lineage)
-        for i in range(n_sub)
+        (p, os.path.join(table.data_dir, f"part_id={p}"), i, n, dv_all.get(p))
+        for p, i, n, _ in slices
     ]
-    par = min(len(work), cores * 2)
-    src = spark.createDataFrame(
-        work, "part_id long, dir string, sl int, n_sub int, dv string"
-    ).repartition(par)
+    weights = [w for *_, w in slices]
 
-    def export(it):
+    def export(units):
         import glob as _glob
         import os as _os
         import tempfile as _tf
@@ -3205,55 +3124,50 @@ def export_job(
             iter_part_tables,
         )
 
-        import json as _j
-
-        for pdf in it:
-            out_rows = []
-            for pid, d, sl, nsub, dv_json in zip(
-                pdf["part_id"], pdf["dir"], pdf["sl"], pdf["n_sub"], pdf["dv"]
-            ):
-                files = sorted(_glob.glob(_os.path.join(d, "*.parquet")))
-                if not files:
-                    raise FileNotFoundError(f"committed part missing: {d}")
-                suffix = f"-s{int(sl):02d}" if int(nsub) > 1 else ""
-                dst = _os.path.join(
-                    out_dir, f"part-{int(pid):06d}{suffix}.parquet"
-                )
-                fd, tmp = _tf.mkstemp(dir=out_dir, prefix=".export-")
-                _os.close(fd)
-                n = 0
-                writer = _pq.ParquetWriter(
-                    tmp, arrow_schema, compression=compression
-                )
-                try:
-                    for tbl in iter_part_tables(
-                        files, fields, conjuncts, fillable=fillable,
-                        slice_of=(int(sl), int(nsub)) if int(nsub) > 1 else None,
-                        aliases=aliases,
-                        dv=_j.loads(dv_json) if dv_json else None,
-                    ):
-                        if conjuncts:  # exact filter (scan is may-match)
-                            mask = None
-                            for col, op, v in conjuncts:
-                                m = _match_mask(tbl[col].combine_chunks(), op, v)
-                                mask = m if mask is None else pc.and_(mask, m)
-                            tbl = tbl.filter(mask)
-                        if tbl.num_rows:
-                            writer.write_table(tbl)
-                            n += tbl.num_rows
-                finally:
-                    writer.close()
-                if n:
-                    _os.replace(tmp, dst)
-                    out_rows.append((int(pid), n, _os.path.getsize(dst)))
-                else:
-                    _os.unlink(tmp)  # fully-filtered slice: no empty file
-                    out_rows.append((int(pid), 0, 0))
-            yield pd.DataFrame(
-                out_rows, columns=["part_id", "rows", "bytes"]
+        out_rows = []
+        for pid, d, sl, nsub, dv in units:
+            files = sorted(_glob.glob(_os.path.join(d, "*.parquet")))
+            if not files:
+                raise FileNotFoundError(f"committed part missing: {d}")
+            suffix = f"-s{int(sl):02d}" if int(nsub) > 1 else ""
+            dst = _os.path.join(
+                out_dir, f"part-{int(pid):06d}{suffix}.parquet"
             )
+            fd, tmp = _tf.mkstemp(dir=out_dir, prefix=".export-")
+            _os.close(fd)
+            n = 0
+            writer = _pq.ParquetWriter(
+                tmp, arrow_schema, compression=compression
+            )
+            try:
+                for tbl in iter_part_tables(
+                    files, fields, conjuncts, fillable=fillable,
+                    slice_of=(int(sl), int(nsub)) if int(nsub) > 1 else None,
+                    aliases=aliases,
+                    dv=dv,
+                ):
+                    if conjuncts:  # exact filter (scan is may-match)
+                        mask = None
+                        for col, op, v in conjuncts:
+                            m = _match_mask(tbl[col].combine_chunks(), op, v)
+                            mask = m if mask is None else pc.and_(mask, m)
+                        tbl = tbl.filter(mask)
+                    if tbl.num_rows:
+                        writer.write_table(tbl)
+                        n += tbl.num_rows
+            finally:
+                writer.close()
+            if n:
+                _os.replace(tmp, dst)
+                out_rows.append((int(pid), n, _os.path.getsize(dst)))
+            else:
+                _os.unlink(tmp)  # fully-filtered slice: no empty file
+                out_rows.append((int(pid), 0, 0))
+        yield pd.DataFrame(out_rows, columns=["part_id", "rows", "bytes"])
 
-    rep = src.mapInPandas(export, schema="part_id long, rows long, bytes long")
+    rep = map_units(
+        spark, work, weights, export, "part_id long, rows long, bytes long"
+    )
     agg = rep.agg(
         F.sum("rows").alias("rows"),
         F.sum("bytes").alias("bytes"),

@@ -130,6 +130,92 @@ def scan_counters(spark) -> dict:
     return {k: spark.sparkContext.accumulator(0) for k in SCAN_COUNTER_KEYS}
 
 
+def pack_units(
+    weights: list[int], cores: int, max_split_bytes: int, open_cost: int
+) -> list[list[int]]:
+    """Each task's unit indexes (ascending). A unit weighs its bytes plus
+    ``open_cost``; the task count is Spark's file-split rule
+    (``FilePartition.maxSplitBytes``, bytes per core rounded up so a small
+    table gets at most ``cores`` tasks):
+
+        maxSplit = min(maxPartitionBytes, max(openCost, ceil(total / cores)))
+        n = min(units, 2 * cores, ceil(total / maxSplit))
+
+    Units go largest first to the least-loaded task, ties to the lower
+    index: deterministic, and no task carries more than the mean plus the
+    largest unit."""
+    import heapq
+
+    if not weights:
+        return []
+    w = [max(int(x), 0) + open_cost for x in weights]
+    total = sum(w)
+    max_split = min(max_split_bytes, max(open_cost, -(-total // cores)))
+    n = max(1, min(len(w), 2 * cores, -(-total // max(max_split, 1))))
+    tasks: list[list[int]] = [[] for _ in range(n)]
+    heap = [(0, t) for t in range(n)]
+    for i in sorted(range(len(w)), key=lambda i: (-w[i], i)):
+        load, t = heapq.heappop(heap)
+        tasks[t].append(i)
+        heapq.heappush(heap, (load + w[i], t))
+    return [sorted(t) for t in tasks]
+
+
+def map_units(
+    spark, units: list, weights: list[int], fn, schema, arrow: bool = False
+) -> DataFrame:
+    """Run ``fn`` -- one task's units in, output batches out (Arrow record
+    batches with ``arrow``, else pandas frames) -- as a Python pass over
+    ``units`` (JSON-able: part dirs, sub-part slices, ...) packed into tasks
+    by :func:`pack_units` under the session's ``spark.sql.files`` split
+    sizes. The pass maps over ``spark.range(n, numPartitions=n)``: no
+    Exchange, no Python stage of its own (Python tasks pay a fixed start-up
+    each), one task per packed task. Each task's units ride in the closure
+    as one JSON string, so the plan stays small and a task parses only its
+    own."""
+    import json
+
+    conf = spark._jsparkSession.sessionState().conf()
+    tasks = [
+        json.dumps([units[i] for i in t])
+        for t in pack_units(
+            weights,
+            spark.sparkContext.defaultParallelism,
+            int(conf.filesMaxPartitionBytes()),
+            int(conf.filesOpenCostInBytes()),
+        )
+    ]
+
+    def task_units(it):
+        for b in it:
+            for i in b.column(0).to_pylist() if arrow else b["id"]:
+                yield from json.loads(tasks[int(i)])
+
+    def run(it):
+        yield from fn(task_units(it))
+
+    frame = spark.range(len(tasks), numPartitions=len(tasks))
+    return frame.mapInArrow(run, schema) if arrow else frame.mapInPandas(run, schema)
+
+
+def part_slices(
+    pids: list[int], lineage: dict[int, dict], cores: int
+) -> list[tuple[int, int, int, int]]:
+    """``(pid, slice_i, n_slices, weight)`` units of a part scan. With fewer
+    parts than cores (small tables, or a heavily part-pruned scan) each
+    part's chunk list splits into contiguous slices so parallelism tracks
+    the cluster; a slice re-reads only the tiny metadata columns, then just
+    the payload row groups its own chunks admit. A slice weighs its share
+    of the part's lineage ``enc_bytes``; a part with no row in ``lineage``
+    (another generation's, in snapshot and diff reads) weighs nothing."""
+    n = max(1, min(-(-cores // len(pids)), 16)) if len(pids) < cores else 1
+    return [
+        (p, i, n, int(lineage.get(p, {}).get("enc_bytes", 0)) // n)
+        for p in pids
+        for i in range(n)
+    ]
+
+
 def decode_table_scan(
     spark,
     table,
@@ -147,8 +233,12 @@ def decode_table_scan(
     each part's chunks in one parquet dir. This path instead distributes the
     committed part *dirs* (tiny strings) and lets each task read + decode its
     parts with pyarrow directly -- the ``sources/pyreader.py`` logic run
-    Spark-side. Zero shuffle of encoded bytes; parallelism = parts; file
-    listing happens in the tasks, not on the driver.
+    Spark-side. No Exchange at all; file listing happens in the tasks, not
+    on the driver. The parts (or, with fewer parts than cores, sub-part
+    slices) are packed into tasks by their lineage ``enc_bytes``
+    (:func:`map_units`): at most cores tasks for a small table, up to
+    2 x cores once it outgrows ``spark.sql.files.maxPartitionBytes`` per
+    core.
 
     ``where=(col, op, literal)`` or a list of such conjuncts (ANDed; op in
     ==, >=, <=, >, <, in, startswith, isnull, notnull -- the last two take
@@ -165,6 +255,7 @@ def decode_table_scan(
     from collections.abc import Iterator
 
     from ..sources.chunkscan import normalize_where
+    from ..sources.tables import SHARD_SIZE
 
     out_schema = _prune_schema(table.schema(), columns)
     arrow_schema = to_arrow_schema(out_schema)
@@ -186,73 +277,49 @@ def decode_table_scan(
     # IO, would otherwise be the bottleneck of a selective query).
     # ``parts`` restricts to an EXPLICIT part set instead (delete_job's
     # full rewrite decode of zone-admitted parts: every row, no pruning).
+    # The lineage rows read here also weigh the parts for task packing.
     if parts is not None:
-        import os as _os
-
-        dirs = [
-            _os.path.join(table.data_dir, f"part_id={p}") for p in sorted(parts)
-        ]
+        pids = sorted(parts)
+        lineage = table.lineage_shards({p // SHARD_SIZE for p in pids})
     else:
-        dirs = table.pruned_part_dirs(conjuncts, spark=spark)
-    if not dirs and table.completed_parts():
+        lineage = table.lineage()
+        pids = sorted(
+            table.surviving_parts(conjuncts, spark=spark) if conjuncts else lineage
+        )
+    if not pids and (parts is not None or lineage):
         # every part provably excluded: empty frame, no job at all
         return spark.createDataFrame([], out_schema)
-    if not dirs:
+    if not pids:
         from ..plans.policy import ConfigException
 
         raise ConfigException(f"table {table.path} has no committed partitions")
-    cores = spark.sparkContext.defaultParallelism
-    # sub-part fan-out: with fewer parts than cores (small tables, or a
-    # heavily part-pruned scan), split each part's chunk list into n_sub
-    # contiguous slices so decode parallelism tracks the cluster, not the
-    # part count. Each slice re-reads only the tiny metadata columns; its
-    # payload pass reads just the row groups its own chunks admit. At scale
-    # (parts >> cores) n_sub stays 1 -- no extra meta reads.
-    n_sub = max(1, min(-(-cores // len(dirs)), 16)) if len(dirs) < cores else 1
-    import json as _json
+    slices = part_slices(pids, lineage, spark.sparkContext.defaultParallelism)
+    units = [
+        (os.path.join(table.data_dir, f"part_id={p}"), i, n, dv.get(p) or None)
+        for p, i, n, _ in slices
+    ]
 
-    def _dv_of(d: str) -> str:
-        try:
-            pid = int(os.path.basename(d.rstrip("/")).split("=", 1)[1])
-        except (IndexError, ValueError):
-            return ""
-        e = dv.get(pid)
-        return _json.dumps(e) if e else ""
-
-    rows = [(d, i, n_sub, _dv_of(d)) for d in dirs for i in range(n_sub)]
-    par = min(len(rows), cores * 2)
-    path_df = spark.createDataFrame(
-        rows, "dir string, slice_i int, n_slices int, dv string"
-    ).repartition(par)
-
-    def dec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import json as _j
-
+    def dec(units: Iterator[list]) -> Iterator[pa.RecordBatch]:
         from ..sources.chunkscan import iter_part_tables
 
-        for b in batches:
-            for d, slice_i, n_slices, dv_json in zip(
-                b.column(0).to_pylist(),
-                b.column(1).to_pylist(),
-                b.column(2).to_pylist(),
-                b.column(3).to_pylist(),
+        for d, slice_i, n_slices, part_dv in units:
+            files = sorted(glob.glob(os.path.join(d, "*.parquet")))
+            if not files:
+                raise FileNotFoundError(f"committed part missing: {d}")
+            st: dict | None = {} if counters is not None else None
+            sl = (slice_i, n_slices) if n_slices > 1 else None
+            for tbl in iter_part_tables(
+                files, fields, conjuncts, st, slice_of=sl,
+                fillable=fillable, aliases=aliases, sample=sample,
+                dv=part_dv,
             ):
-                files = sorted(glob.glob(os.path.join(d, "*.parquet")))
-                if not files:
-                    raise FileNotFoundError(f"committed part missing: {d}")
-                st: dict | None = {} if counters is not None else None
-                sl = (slice_i, n_slices) if n_slices > 1 else None
-                for tbl in iter_part_tables(
-                    files, fields, conjuncts, st, slice_of=sl,
-                    fillable=fillable, aliases=aliases, sample=sample,
-                    dv=_j.loads(dv_json) if dv_json else None,
-                ):
-                    yield from tbl.to_batches()
-                if counters is not None:
-                    for k, acc in counters.items():
-                        acc.add(st.get(k, 0))
+                yield from tbl.to_batches()
+            if counters is not None:
+                for k, acc in counters.items():
+                    acc.add(st.get(k, 0))
 
-    return path_df.mapInArrow(dec, schema=out_schema)
+    weights = [w for *_, w in slices]
+    return map_units(spark, units, weights, dec, out_schema, arrow=True)
 
 
 def decode_inline(encoded: DataFrame, out_schema: T.StructType) -> DataFrame:

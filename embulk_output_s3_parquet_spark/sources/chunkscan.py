@@ -448,6 +448,22 @@ def merge_sum(t: str, a, b):
         return None
 
 
+def fold_stat(acc: dict[str, dict], col: str, e: dict) -> None:
+    """Fold one column-stat entry ``{"t", "mm", "sm", "nn"}`` (missing keys
+    = no contribution) into ``acc[col]``, created empty on first use: the
+    union of the zones, the sum of the sums, the count of the non-nulls."""
+    cur = acc.setdefault(col, {"t": "", "mm": None, "sm": None, "nn": 0})
+    t = cur["t"] or e.get("t", "")
+    if e.get("mm") is not None:
+        cur["mm"] = (
+            list(e["mm"]) if cur["mm"] is None else merge_zone(t, cur["mm"], list(e["mm"]))
+        )
+    if e.get("sm") is not None:
+        cur["sm"] = e["sm"] if cur["sm"] is None else merge_sum(t, cur["sm"], e["sm"])
+    cur["nn"] += int(e.get("nn", 0))
+    cur["t"] = t
+
+
 def conjunct_state_of(
     cols_meta: dict, n: int, c: str, op: str, v,
     fillable: frozenset[str] = frozenset(),

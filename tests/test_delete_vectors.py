@@ -126,6 +126,58 @@ def test_mor_union_counts_only_fresh_bits(spark, docs, table):
     assert rep3["rows_deleted"] == 0
 
 
+def test_mor_delete_loads_lineage_of_the_marked_shard_only(
+    spark, docs, tmp_path, monkeypatch
+):
+    """The marking job re-reads full lineage rows only for the shards
+    holding parts it marked: a delete confined to one of two shards
+    amends the same rows an unscoped load gives, and parses no other
+    shard's lineage file."""
+    from embulk_output_s3_parquet_spark.sources import tables as tmod
+    from embulk_output_s3_parquet_spark.sources.tables import SHARD_SIZE
+
+    n = docs.count()
+    path = str(tmp_path / "two_shards")
+    encode_job(spark, docs.filter(F.col("doc_id") < n // 2), path, _pol(),
+               if_exists="error")
+    encode_job(spark, docs.filter(F.col("doc_id") >= n // 2), path, _pol(),
+               if_exists="skip", part_base=SHARD_SIZE)
+    before = EncodedTable(path).lineage_full()
+    assert {p // SHARD_SIZE for p in before} == {0, 1}
+
+    scopes, loaded = [], []
+    real_full, real_load = EncodedTable.lineage_full, tmod._load_shard_cached
+
+    def spy_full(self, shards=None):
+        scopes.append(shards)
+        monkeypatch.setattr(
+            tmod, "_load_shard_cached",
+            lambda p: loaded.append(os.path.basename(p)) or real_load(p),
+        )
+        try:
+            return real_full(self, shards=shards)
+        finally:
+            monkeypatch.setattr(tmod, "_load_shard_cached", real_load)
+
+    monkeypatch.setattr(EncodedTable, "lineage_full", spy_full)
+    cut = n - 40  # the last rows: all in the second wave
+    rep = delete_job(spark, path, ("doc_id", ">=", cut), mode="mor")
+    monkeypatch.undo()
+
+    assert rep["rows_deleted"] == 40
+    # the marking job's load, then the flip's own scoped one
+    assert scopes and all(s == {1} for s in scopes)
+    assert "shard-1.json" in loaded
+    assert all(f.startswith("shard-1.") for f in loaded), loaded
+    after = EncodedTable(path).lineage_full()
+    changed = {p for p in after if after[p] != before[p]}
+    assert changed == {p for p, r in after.items() if "dv" in r}
+    assert changed and all(p // SHARD_SIZE == 1 for p in changed)
+    for p in changed:
+        assert {k: v for k, v in after[p].items() if k != "dv"} == before[p]
+    assert count_job(spark, path) == n - 40
+
+
 def test_mor_then_cow_then_compact_materializes(spark, docs, table):
     n = docs.count()
     delete_job(spark, table, ("doc_id", "<", 100), mode="mor")
