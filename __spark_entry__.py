@@ -1378,8 +1378,8 @@ SELECT pred, cnt FROM (
   UNION ALL SELECT 'max_doc', max(doc_id) FROM documents
   UNION ALL SELECT 'min_doc_band', min(doc_id) FROM documents WHERE n_chars >= 200 AND n_chars < 400
   UNION ALL SELECT 'max_doc_band', max(doc_id) FROM documents WHERE n_chars >= 200 AND n_chars < 400
-  UNION ALL SELECT 'sum_chars', sum(n_chars) FROM documents
-  UNION ALL SELECT 'sum_doc_band', sum(doc_id) FROM documents WHERE n_chars >= 200 AND n_chars < 400
+  UNION ALL SELECT 'sum_chars', CAST(sum(n_chars) AS BIGINT) FROM documents
+  UNION ALL SELECT 'sum_doc_band', CAST(sum(doc_id) AS BIGINT) FROM documents WHERE n_chars >= 200 AND n_chars < 400
 ) ORDER BY pred
 """
 

@@ -3,9 +3,12 @@
 Control path mirrors the reference's driver-side lifecycle (reference
 S3ParquetOutputPlugin.scala:27-56): validate config -> build plan -> launch
 tasks -> collect task reports -> register catalog entry. Here: validate
-policy -> byte-balanced salted partition plan -> skip checkpointed parts
-(left_anti on the manifest) -> applyInArrow encode -> stage -> atomic commit
-with per-partition lineage.
+policy -> byte-balanced partition plan -> skip checkpointed parts
+(left_anti on the manifest) -> encode -> the task holding each whole part
+writes it into staging and returns its lineage row (the TaskReport,
+S3ParquetPageOutput.scala:61-67; ``_stage_parts``) -> the driver collects
+the rows -> atomic commit with per-partition lineage. No job re-reads the
+staged files.
 """
 
 from __future__ import annotations
@@ -17,153 +20,63 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators.decode import decode_chunks, map_units, part_slices
-from .operators.encode import encode_grouped, encode_local
+from .operators.encode import encode_grouped, encode_local, stage_parts
 from .plans.partitioning import assign_partitions, assign_partitions_generic
 from .plans.policy import CodecPolicy, ConfigException
 from .sources.tables import EncodedTable
 
-# re-exported here because lineage_row_from_chunks applies the budget at
-# commit time (tests reference it as jobs.PART_BF_MAX_BYTES)
-from .codecs.bloom import PART_BF_MAX_BYTES
 
-
-# merge_zone/merge_sum moved to sources.chunkscan (minmax_file/sum_file share
-# them executor-side without importing this pyspark-heavy module in tasks);
-# re-exported because lineage_row_from_chunks and tests use jobs.merge_zone
-from .sources.chunkscan import merge_sum, merge_zone, summable as _summable  # noqa: E402,F401
-
-
-def lineage_row_from_chunks(
-    seqs, cols, metas_json, shas, raw_bytes, enc_bytes, ns, first_col: str
-) -> dict:
-    """Build one part's lineage row (rows/chunks/bytes, order-canonical
-    sha256 chunk manifest, per-column zone summaries) from parallel chunk
-    metadata sequences. The ONE canonicalization -- shared by the commit
-    job's per-part pass and the Catalyst writer, so verify_table's sha
-    recomputation can never drift from either producer."""
-    import hashlib as _h
+def _collect_staged(staged: DataFrame, staging: str, t0: float) -> dict[int, dict]:
+    """Run a part-writing stage (``STAGED_SCHEMA``: each task wrote its
+    parts into ``staging``) and collect {part_id: lineage row}, stamped with
+    the job's wall time. The heartbeat keeps the .writer-lock fresh for the
+    whole stage, so a long stage never looks sweepable to a concurrent
+    vacuum on another host."""
     import json as _json
 
-    zones: dict = {}
-    codecs: set = set()
-    chunk_bfs: dict[str, list] = {}
-    part_bfs: dict[str, list] = {}
-    part_hlls: dict[str, list] = {}
-    rows = 0
-    for col, n, mj in zip(cols, ns, metas_json):
-        m = _json.loads(mj)
-        codecs.add(m["c"])
-        if col == first_col:
-            rows += int(n)
-        e = {
-            "t": m.get("t", ""),
-            "n": int(m.get("n", 0)),
-            "z": int(m.get("z", 0)),
-            "mm": m.get("mm"),
-            "mp": m.get("mm") if m.get("mm") is not None else m.get("mp"),
-            "sm": m.get("sm"),
-        }
-        if e["sm"] is None and e["z"] >= e["n"] and _summable(e["t"]):
-            # an all-null chunk records no sum but CONTRIBUTES zero -- only
-            # a value-carrying chunk without one poisons the part sum
-            e["sm"] = "0" if e["t"].startswith("decimal128(") else 0
-        chunk_bfs.setdefault(col, []).append(m.get("bf"))
-        if "pbf" in m:
-            part_bfs.setdefault(col, []).append(m["pbf"])
-        if "phl" in m:
-            part_hlls.setdefault(col, []).append(m["phl"])
-        cur = zones.get(col)
-        if cur is None:
-            zones[col] = e
-        else:
-            cur["n"] += e["n"]
-            cur["z"] += e["z"]
-            cur["mm"] = merge_zone(cur["t"], cur["mm"], e["mm"])
-            # part-level widened zone: union over each chunk's exact zone
-            # (which embeds in its own widening) or prefix zone; one chunk
-            # with neither poisons it, same rule as "mm"
-            cur["mp"] = merge_zone(cur["t"], cur["mp"], e["mp"])
-            cur["sm"] = merge_sum(cur["t"], cur["sm"], e["sm"])
-    for e in zones.values():  # poisoned/non-summable/redundant: no bytes
-        if e.get("sm") is None:
-            e.pop("sm", None)
-        if e.get("mp") is None or e.get("mm") is not None:
-            e.pop("mp", None)  # exact part zone present: widening is noise
-    # part-level blooms so a point lookup prunes whole PARTS driver-side
-    # via pruned_part_dirs/surviving_parts -- zones can't exclude unsorted
-    # high-cardinality keys, exactly the columns blooms are opted into.
-    # Preferred source: the encoder's call-level "pbf" filters (one per
-    # encode call per column, sized ~10 bits per COVERED row -- a union of
-    # chunk-sized filters saturates on multi-chunk parts). Fallback for
-    # metas from older producers: OR the chunk filters per geometry.
-    # Either way merge_groups returns None (no entry, no manifest bytes)
-    # on any gap or when a group is too saturated to ever skip.
-    from .codecs import bloom as _bloom
+    from .sources.tables import staging_heartbeat
 
-    for col, bfs in chunk_bfs.items():
-        src = part_bfs.get(col) or bfs
-        merged = _bloom.merge_groups(src)
-        if merged is not None and sum(g["m"] // 8 for g in merged) <= PART_BF_MAX_BYTES:
-            zones[col]["bf"] = merged[0] if len(merged) == 1 else merged
-    # part-level NDV sketch: register-wise union of the call-level "phl"
-    # sketches (an all-null call records none and contributes no values,
-    # so merging whatever is present is exact for the part's support)
-    from .codecs import hll as _hll
-
-    for col, hls in part_hlls.items():
-        merged_hl = _hll.merge(hls)
-        if merged_hl is not None and col in zones:
-            zones[col]["hl"] = merged_hl
-    sha = _h.sha256(
-        "".join(s for _, _, s in sorted(zip(seqs, cols, shas))).encode()
-    ).hexdigest()
+    with staging_heartbeat(staging):
+        got = staged.collect()
+    wall = round(time.time() - t0, 3)
     return {
-        "rows": rows,
-        "chunks": len(set(seqs)),
-        "raw_bytes": int(sum(raw_bytes)),
-        "enc_bytes": int(sum(enc_bytes)),
-        "sha256_manifest": sha,
-        "codecs": sorted(codecs),
-        "zones": zones,
+        int(r["part_id"]): {**_json.loads(r["lineage"]), "wall_s": wall}
+        for r in got
     }
 
 
-def _lineage_rows(encoded_on_disk: DataFrame, first_col: str, wall_s: float) -> dict[int, dict]:
-    """One metadata job per commit: group the chunk metadata columns
-    (payloads never move) by part and compute the whole lineage row via
-    ``lineage_row_from_chunks``."""
-    import json as _json
-
-    sel = encoded_on_disk.select(
-        "part_id", "chunk_seq", "col", "meta", "raw_bytes", "enc_bytes", "payload_sha", "n"
-    )
-
-    def per_part(pdf):
-        import pandas as pd
-
-        row = lineage_row_from_chunks(
-            [int(x) for x in pdf["chunk_seq"]],
-            list(pdf["col"]),
-            list(pdf["meta"]),
-            list(pdf["payload_sha"]),
-            list(pdf["raw_bytes"]),
-            list(pdf["enc_bytes"]),
-            list(pdf["n"]),
-            first_col,
+def _stage_parts(
+    dfp: DataFrame, policy: CodecPolicy, cluster: tuple, zorder: bool,
+    grouped: bool, staging: str, first_col: str, t0: float,
+) -> dict[int, dict]:
+    """The one part-writing stage of every plan -> encode -> commit tail:
+    the task holding each whole part writes it (operators.encode.
+    write_part). ``grouped`` shuffles raw rows so a task holds a whole part
+    before encoding (rows mode, z-order); otherwise rows encode where they
+    sit and only the encoded chunks shuffle to their part's writer."""
+    stage = (staging, first_col)
+    if grouped:
+        # z-order requires WHOLE parts per task: rank-interleaving over a
+        # scan-partition fragment of a part gives fragment-sized boxes
+        # (measured: 0.65x-domain chunk zones vs 0.23 with co-located
+        # parts). The raw-row shuffle is the same trade Delta's OPTIMIZE
+        # ZORDER makes (repartition by z-range before rewriting files).
+        staged = encode_grouped(
+            dfp, policy, cluster_by=cluster, zorder=zorder, stage=stage
         )
-        return pd.DataFrame(
-            {"part_id": [int(pdf["part_id"].iloc[0])], "lineage": [_json.dumps(row)]}
-        )
+    else:
+        staged = stage_parts(encode_local(dfp, policy, cluster_by=cluster), *stage)
+    return _collect_staged(staged, staging, t0)
 
-    out: dict[int, dict] = {}
-    collected = sel.groupBy("part_id").applyInPandas(
-        per_part, "part_id long, lineage string"
-    ).collect()
-    for r in collected:
-        row = _json.loads(r["lineage"])
-        row["wall_s"] = round(wall_s, 3)
-        out[int(r["part_id"])] = row
-    return out
+
+def _commit_wave(
+    table: EncodedTable, staging: str, lineage: dict[int, dict], op: str
+) -> EncodedTable:
+    table.commit_staging(staging, lineage)
+    if lineage:
+        rows = sum(r["rows"] for r in lineage.values())
+        table.log_op(op, {"parts": len(lineage), "rows": rows})
+    return table
 
 
 def _record_write_order(table: EncodedTable, cluster: tuple, zorder: bool) -> None:
@@ -289,36 +202,13 @@ def encode_job(
         keep = spark.createDataFrame([(p,) for p in todo], "part_id long")
         dfp = dfp.join(F.broadcast(keep), "part_id", "left_semi")
 
-    if shuffle_mode == "rows" or zorder:
-        # z-order requires WHOLE parts per task: rank-interleaving over a
-        # scan-partition fragment of a part gives fragment-sized boxes
-        # (measured: 0.65x-domain chunk zones vs 0.23 with co-located
-        # parts). The raw-row shuffle is the same trade Delta's OPTIMIZE
-        # ZORDER makes (repartition by z-range before rewriting files).
-        encoded = encode_grouped(dfp, policy, cluster_by=cluster, zorder=zorder)
-    else:
-        # shuffle AFTER encoding: only compressed chunks move to part files
-        encoded = encode_local(dfp, policy, cluster_by=cluster).repartition(
-            "part_id"
-        )
     staging = table.new_staging()
-    _write_chunk_files(encoded, staging)
-
-    import os
-
-    wrote_parts = any(n.startswith("part_id=") for n in os.listdir(staging))
-    if not wrote_parts:
-        table.commit_staging(staging, {})
-        return table
-    on_disk = spark.read.parquet(staging)
-    lineage = _lineage_rows(on_disk, df.schema.fields[0].name, time.time() - t0)
-    _annotate_buckets(lineage, plan.bucket_ranges, shift=part_base)
-    table.commit_staging(staging, lineage)
-    table.log_op(
-        "encode",
-        {"parts": len(lineage), "rows": sum(r["rows"] for r in lineage.values())},
+    lineage = _stage_parts(
+        dfp, policy, cluster, zorder, shuffle_mode == "rows" or zorder,
+        staging, df.schema.fields[0].name, t0,
     )
-    return table
+    _annotate_buckets(lineage, plan.bucket_ranges, shift=part_base)
+    return _commit_wave(table, staging, lineage, "encode")
 
 
 def encode_parquet_job(
@@ -389,31 +279,21 @@ def encode_parquet_job(
     # encode_job): rewrites mint their ids above it
     if _splits:
         table.note_part_extent(len(_splits) - 1)
-    # no repartition: a split IS a part and never spans tasks, so the
-    # partitionBy writer already gets whole parts -- zero shuffle end to
+    # no repartition: a split IS a part and never spans tasks, so the task
+    # that encodes it writes it -- one Python stage, zero shuffle end to
     # end. The splits planned above are passed through: encode_direct must
     # not replan, or an input change between two plans would bypass the
     # fingerprint guard.
-    encoded = encode_direct(
+    staging = table.new_staging()
+    staged = encode_direct(
         spark, parquet_path, policy, parallelism=parallelism,
         skip_parts=frozenset(done), max_parts=max_parts, cluster_by=cluster,
         plan=(_splits, schema), zorder=zorder,
+        stage=(staging, schema.fields[0].name),
     )
-    staging = table.new_staging()
-    _write_chunk_files(encoded, staging)
-    import os
-
-    if not any(n.startswith("part_id=") for n in os.listdir(staging)):
-        table.commit_staging(staging, {})
-        return table
-    on_disk = spark.read.parquet(staging)
-    lineage = _lineage_rows(on_disk, schema.fields[0].name, time.time() - t0)
-    table.commit_staging(staging, lineage)
-    table.log_op(
-        "encode_direct",
-        {"parts": len(lineage), "rows": sum(r["rows"] for r in lineage.values())},
+    return _commit_wave(
+        table, staging, _collect_staged(staged, staging, t0), "encode_direct"
     )
-    return table
 
 
 def decode_job(
@@ -1577,31 +1457,14 @@ def compact_job(
     offset = table.next_part_base()
     if plan.n_parts:
         table.note_part_extent(offset + plan.n_parts - 1)
-    if zorder:
-        encoded = encode_grouped(dfp, policy, cluster_by=cluster, zorder=True)
-    else:
-        encoded = encode_local(dfp, policy, cluster_by=cluster).repartition(
-            "part_id"
-        )
     staging = table.new_staging()
-    t0 = time.time()
-    _write_chunk_files(encoded, staging)
-    on_disk = spark.read.parquet(staging)
-    lineage = _lineage_rows(on_disk, table.schema().fields[0].name, time.time() - t0)
-
-    remap: dict[int, int] = {}
-    for name in sorted(os.listdir(staging)):
-        if not name.startswith("part_id="):
-            continue
-        pid = int(name.split("=", 1)[1])
-        new_pid = pid + offset
-        remap[pid] = new_pid
-        dst = os.path.join(table.data_dir, f"part_id={new_pid}")
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        os.rename(os.path.join(staging, name), dst)
+    lineage = _stage_parts(
+        dfp, policy, cluster, bool(zorder), bool(zorder), staging,
+        table.schema().fields[0].name, time.time(),
+    )
+    table.move_staged(staging, lineage, shift=offset)
     _annotate_buckets(lineage, plan.bucket_ranges)
-    table._replace_parts({remap[pid]: row for pid, row in lineage.items()})
+    table._replace_parts({pid + offset: row for pid, row in lineage.items()})
     if cluster:
         _record_write_order(table, cluster, bool(zorder))
     elif table.properties().get("write-order"):
@@ -1744,39 +1607,6 @@ def rewrite_small_parts(
     report["rows"] = sum(int(r.get("rows", 0)) for r in new_lineage.values())
     table.log_op("rewrite_small_parts", dict(report))
     return report
-
-
-# chunk files are laid out for the two-pass pruning scan
-# (sources/chunkscan.py): rows sorted by (col, chunk_seq) make parquet
-# row-group min/max stats on those two columns tight, so a projected or
-# zone-filtered read skips whole row groups' payload BYTES -- not just their
-# decode CPU. Row groups are kept small (4 MiB vs the 128 MiB default) so a
-# skipped column/chunk range actually maps to skippable row groups; the
-# footer overhead at 64 MiB parts is noise.
-_CHUNK_ROW_GROUP_BYTES = 4 * 1024 * 1024
-
-
-def _write_chunk_files(encoded: DataFrame, staging: str) -> None:
-    from .sources.tables import staging_heartbeat
-
-    # part_id MUST lead the sort: partitionBy's writer requires ordering by
-    # the partition columns and would otherwise inject its own (non-stable)
-    # sort, destroying the (col, chunk_seq) run layout the scanner prunes on.
-    # The heartbeat keeps the .writer-lock mtime fresh for the whole write:
-    # a compute stage that runs past the cross-host staleness window before
-    # its first staged file lands must not look sweepable to a concurrent
-    # vacuum on another host.
-    with staging_heartbeat(staging):
-        (
-            encoded.sortWithinPartitions("part_id", "col", "chunk_seq")
-            .write.option("parquet.block.size", _CHUNK_ROW_GROUP_BYTES)
-            .partitionBy("part_id")
-            # append: the staging dir pre-exists holding only the
-            # .writer-lock (new_staging); the dir itself is uuid-fresh so
-            # this never mixes with another run's files
-            .mode("append")
-            .parquet(staging, compression="none")
-        )
 
 
 def _plan(df: DataFrame, policy: CodecPolicy, bucket: tuple | None = None):
@@ -1950,34 +1780,57 @@ def verify_table(spark: SparkSession, table_path: str) -> list[dict]:
     """Integrity audit: recompute every part's sha256 chunk manifest from
     the files on disk and diff against the committed lineage (the etag-check
     analogue of the reference's TaskReport bucket/key/etag,
-    S3ParquetPageOutput.scala:61-67). Returns mismatch records (empty =
-    table verified)."""
+    S3ParquetPageOutput.scala:61-67). Each part is audited where it sits
+    (``map_units``: no shuffle), reading only ``chunk_seq``, ``col`` and
+    ``payload_sha`` and hashing them with the writers' own
+    ``manifest_sha``. Returns mismatch records (empty = table verified)."""
     import os
 
     table = EncodedTable(table_path)
-    expected = {pid: v["sha256_manifest"] for pid, v in table.lineage().items()}
-    first_col = table.schema().fields[0].name
-    # scan data/ directly (NOT read_encoded, which prunes to committed parts
-    # and so could never see a stray uncommitted dir)
-    on_disk = [n for n in os.listdir(table.data_dir) if n.startswith("part_id=")]
-    if on_disk:
-        raw = spark.read.option("basePath", table.data_dir).parquet(
-            *[os.path.join(table.data_dir, n) for n in on_disk]
-        )
-        actual_rows = _lineage_rows(
-            raw.withColumn("part_id", F.col("part_id").cast("long")), first_col, 0.0
-        )
-    else:
-        actual_rows = {}
+    lineage = table.lineage()
+    expected = {pid: v["sha256_manifest"] for pid, v in lineage.items()}
+    # scan data/ directly (NOT the committed part set, which could never
+    # see a stray uncommitted dir)
+    on_disk = sorted(
+        int(n.split("=", 1)[1]) for n in os.listdir(table.data_dir) if n.startswith("part_id=")
+    )
+    work = [(p, os.path.join(table.data_dir, f"part_id={p}")) for p in on_disk]
+    weights = [int(lineage.get(p, {}).get("enc_bytes", 0)) for p in on_disk]
+
+    def audit(units):
+        import glob as _glob
+
+        import pandas as pd
+        import pyarrow.parquet as _pq
+
+        from embulk_output_s3_parquet_spark.operators.encode import manifest_sha
+
+        out = []
+        for pid, d in units:
+            seqs, cols, shas = [], [], []
+            for f in sorted(_glob.glob(os.path.join(d, "*.parquet"))):
+                t = _pq.read_table(f, columns=["chunk_seq", "col", "payload_sha"])
+                seqs += t.column("chunk_seq").to_pylist()
+                cols += t.column("col").to_pylist()
+                shas += t.column("payload_sha").to_pylist()
+            if seqs:  # a dir holding no chunk rows reads as missing
+                out.append((int(pid), manifest_sha(seqs, cols, shas)))
+        yield pd.DataFrame(out, columns=["part_id", "sha"]).astype({"part_id": "int64"})
+
+    got = (
+        map_units(spark, work, weights, audit, "part_id long, sha string").collect()
+        if work else []
+    )
+    actual = {int(r["part_id"]): r["sha"] for r in got}
     problems = []
     for pid, want in expected.items():
-        got = actual_rows.get(pid)
+        got = actual.get(pid)
         if got is None:
             problems.append({"part_id": pid, "error": "missing on disk"})
-        elif got["sha256_manifest"] != want:
+        elif got != want:
             problems.append(
                 {"part_id": pid, "error": "sha256 manifest mismatch",
-                 "expected": want, "actual": got["sha256_manifest"]}
+                 "expected": want, "actual": got}
             )
     # parts referenced by ANY on-disk superseded generation are tracked,
     # not strays -- including generations past the retention window that
@@ -1989,7 +1842,7 @@ def verify_table(spark: SparkSession, table_path: str) -> list[dict]:
             snapshot_ids |= set(table.lineage_at(g))
         except ConfigException:
             pass
-    for pid in set(actual_rows) - set(expected) - snapshot_ids:
+    for pid in set(actual) - set(expected) - snapshot_ids:
         problems.append({"part_id": pid, "error": "untracked part on disk"})
     return problems
 
@@ -2157,9 +2010,10 @@ def _delete_cow_inplace(
 
     The generic rewrite tail (_swap_in_rewrite) decodes the affected
     parts into JVM rows, persists them, re-plans partitions, ships every
-    byte back into Python to re-encode, shuffles chunks, and runs a
-    separate lineage job -- measured 8.6 s for an 18-part trickle delete
-    whose kernels cost ~2 core-seconds. A DELETE never changes a row, so
+    byte back into Python to re-encode, and shuffles chunks to their part
+    writers -- measured 8.6 s for an 18-part trickle delete whose kernels
+    cost ~2 core-seconds (when that tail still ran a separate lineage job
+    over the staged files). A DELETE never changes a row, so
     each part can rewrite 1:1 where it sits: one task decodes its part
     with pyarrow, drops matching rows, re-applies the recorded
     write-order, re-encodes through the same chunk kernels, writes the
@@ -2203,8 +2057,8 @@ def _local_parts_rewrite(
     (delete vectors applied), optionally
     drops rows matching ``conjuncts`` (NULL predicate = kept, see
     _delete_cow_inplace), re-applies the recorded write-order, re-encodes
-    through the chunk kernels, writes one (col, chunk_seq)-sorted chunk
-    parquet into staging, and reports its lineage row. The driver then
+    through the chunk kernels, writes the part into staging
+    (operators.encode.write_part), and reports its lineage row. The driver then
     moves the staged dirs in and flips the generation once
     (_update_parts). No payload byte ever crosses the JVM boundary or the
     network."""
@@ -2262,17 +2116,16 @@ def _local_parts_rewrite(
 
     def rewrite(units):
         import glob as _glob
-        import uuid as _uuid
 
         import pandas as pd
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as _pq
 
         from embulk_output_s3_parquet_spark.operators.encode import (
             _effective_chunk_rows,
             _encode_slices,
             _zorder_take,
+            write_part,
         )
         from embulk_output_s3_parquet_spark.sources.chunkscan import (
             _match_mask,
@@ -2320,39 +2173,7 @@ def _local_parts_rewrite(
                 int(new_pid), whole, colmap, eff,
                 bloom_cols=bloom_cols, ndv_cols=ndv_cols,
             )
-            enc = enc.drop_columns(["part_id"]).sort_by(
-                [("col", "ascending"), ("chunk_seq", "ascending")]
-            )
-            part_dir = os.path.join(staging, f"part_id={int(new_pid)}")
-            os.makedirs(part_dir, exist_ok=True)
-            rows_per_group = max(
-                1,
-                int(4 * 1024 * 1024 * enc.num_rows // max(enc.nbytes, 1)),
-            )
-            # temp + atomic replace onto a DETERMINISTIC name: a
-            # retried/speculative task re-replaces the same file
-            # instead of leaving two parquet files in one part dir
-            tmp = os.path.join(
-                part_dir, f".tmp-{_uuid.uuid4().hex[:12]}"
-            )
-            _pq.write_table(
-                enc, tmp,
-                row_group_size=rows_per_group,
-                compression="none",
-            )
-            os.replace(
-                tmp, os.path.join(part_dir, "part-00000.parquet")
-            )
-            row = lineage_row_from_chunks(
-                enc.column("chunk_seq").to_pylist(),
-                enc.column("col").to_pylist(),
-                enc.column("meta").to_pylist(),
-                enc.column("payload_sha").to_pylist(),
-                enc.column("raw_bytes").to_pylist(),
-                enc.column("enc_bytes").to_pylist(),
-                enc.column("n").to_pylist(),
-                first_col,
-            )
+            row = write_part(staging, int(new_pid), enc, first_col)
             row["wall_s"] = round(time.time() - tw0, 3)
             if bucket is not None:
                 row["bucket"] = int(bucket)
@@ -2371,11 +2192,7 @@ def _local_parts_rewrite(
         raise RuntimeError(
             f"local rewrite incomplete: {len(got)}/{len(work)} groups reported"
         )
-    for pid in sorted(new_lineage):
-        dst = os.path.join(table.data_dir, f"part_id={pid}")
-        if os.path.exists(dst):
-            shutil.rmtree(dst)  # uncommitted leftover of a killed run
-        os.rename(os.path.join(staging, f"part_id={pid}"), dst)
+    table.move_staged(staging, new_lineage)
     table._update_parts(remove=set(affected), add=new_lineage)
     # same post-flip hygiene as _swap_in_rewrite: at retention 0 only
     # tag-pinned superseded parts survive
@@ -2623,29 +2440,13 @@ def _swap_in_rewrite(
     offset = table.next_part_base()
     if plan_out.n_parts:
         table.note_part_extent(offset + plan_out.n_parts - 1)
-    if zorder:
-        encoded = encode_grouped(dfp, policy, cluster_by=cluster, zorder=True)
-    else:
-        encoded = encode_local(dfp, policy, cluster_by=cluster).repartition(
-            "part_id"
-        )
     staging = table.new_staging()
-    _write_chunk_files(encoded, staging)
-    new_lineage: dict[int, dict] = {}
-    staged = [
-        n for n in sorted(os.listdir(staging)) if n.startswith("part_id=")
-    ]
-    if staged:
-        on_disk = spark.read.parquet(staging)
-        raw = _lineage_rows(on_disk, schema.fields[0].name, time.time() - t0)
-        for name in staged:
-            pid = int(name.split("=", 1)[1])
-            dst = os.path.join(table.data_dir, f"part_id={pid + offset}")
-            if os.path.exists(dst):
-                shutil.rmtree(dst)  # uncommitted leftover of a killed run
-            os.rename(os.path.join(staging, name), dst)
-        _annotate_buckets(raw, plan_out.bucket_ranges)
-        new_lineage = {pid + offset: row for pid, row in raw.items()}
+    raw = _stage_parts(
+        dfp, policy, cluster, zorder, zorder, staging, schema.fields[0].name, t0
+    )
+    table.move_staged(staging, raw, shift=offset)
+    _annotate_buckets(raw, plan_out.bucket_ranges)
+    new_lineage = {pid + offset: row for pid, row in raw.items()}
     # keep_affected (merge-on-read UPDATE): the affected parts STAY live
     # (their delete vectors in ``extra_rows`` mask the superseded rows) and
     # the appended parts join them -- still ONE atomic flip

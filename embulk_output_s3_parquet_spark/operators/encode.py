@@ -14,6 +14,11 @@ Two entry points sharing one kernel:
   ~target_partition_bytes, the analogue of the reference's one-file-per-task).
 * ``encode_map``       -- shuffle-free ``mapInArrow`` using the physical
   partition id (for in-memory round-trips and benchmarks).
+
+Every table-writing path ends in ``write_part``: the task that holds a whole
+part writes its chunk file and returns its lineage row (``stage_parts``
+after ``encode_local``'s chunk shuffle; ``stage=`` on ``encode_grouped`` and
+``encode_direct``, whose tasks already hold whole parts).
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from pyspark.sql import types as T
 
 from ..codecs import encode_array, meta_to_json
 from ..plans.policy import CodecPolicy
+from ..sources.chunkscan import merge_sum, merge_zone, summable
 
 ENCODED_SCHEMA = T.StructType(
     [
@@ -57,6 +63,207 @@ _ENC_ARROW = pa.schema(
         ("payload_sha", pa.string()),
     ]
 )
+
+
+# Part files are laid out for the two-pass pruning scan
+# (sources/chunkscan.py): rows sorted by (col, chunk_seq) make parquet
+# row-group min/max stats on those two columns tight, so a projected or
+# zone-filtered read skips whole row groups' payload BYTES -- not just their
+# decode CPU. Row groups are kept small (4 MiB vs the 128 MiB default) so a
+# skipped column/chunk range actually maps to skippable row groups; the
+# footer overhead at 64 MiB parts is noise.
+_CHUNK_ROW_GROUP_BYTES = 4 * 1024 * 1024
+# one file per part dir under a DETERMINISTIC name: a retried or
+# speculative writer replaces it instead of adding a second file
+PART_FILE = "part-00000.parquet"
+STAGED_SCHEMA = "part_id long, lineage string"
+_STAGED_ARROW = pa.schema([("part_id", pa.int64()), ("lineage", pa.string())])
+
+
+def manifest_sha(seqs, cols, shas) -> str:
+    """A part's order-canonical sha256 chunk manifest: payload shas
+    concatenated in (chunk_seq, col) order. Shared by the writers
+    (:func:`lineage_row_from_chunks`) and the auditor (``verify_table``),
+    so the two can never drift."""
+    return hashlib.sha256(
+        "".join(s for _, _, s in sorted(zip(seqs, cols, shas))).encode()
+    ).hexdigest()
+
+
+def lineage_row_from_chunks(
+    seqs, cols, metas_json, shas, raw_bytes, enc_bytes, ns, first_col: str
+) -> dict:
+    """Build one part's lineage row (rows/chunks/bytes, order-canonical
+    sha256 chunk manifest, per-column zone summaries) from parallel chunk
+    metadata sequences. The ONE canonicalization: every table-writing path
+    builds its rows through :func:`write_part`."""
+    import json as _json
+
+    zones: dict = {}
+    codecs: set = set()
+    chunk_bfs: dict[str, list] = {}
+    part_bfs: dict[str, list] = {}
+    part_hlls: dict[str, list] = {}
+    rows = 0
+    for col, n, mj in zip(cols, ns, metas_json):
+        m = _json.loads(mj)
+        codecs.add(m["c"])
+        if col == first_col:
+            rows += int(n)
+        e = {
+            "t": m.get("t", ""),
+            "n": int(m.get("n", 0)),
+            "z": int(m.get("z", 0)),
+            "mm": m.get("mm"),
+            "mp": m.get("mm") if m.get("mm") is not None else m.get("mp"),
+            "sm": m.get("sm"),
+        }
+        if e["sm"] is None and e["z"] >= e["n"] and summable(e["t"]):
+            # an all-null chunk records no sum but CONTRIBUTES zero -- only
+            # a value-carrying chunk without one poisons the part sum
+            e["sm"] = "0" if e["t"].startswith("decimal128(") else 0
+        chunk_bfs.setdefault(col, []).append(m.get("bf"))
+        if "pbf" in m:
+            part_bfs.setdefault(col, []).append(m["pbf"])
+        if "phl" in m:
+            part_hlls.setdefault(col, []).append(m["phl"])
+        cur = zones.get(col)
+        if cur is None:
+            zones[col] = e
+        else:
+            cur["n"] += e["n"]
+            cur["z"] += e["z"]
+            cur["mm"] = merge_zone(cur["t"], cur["mm"], e["mm"])
+            # part-level widened zone: union over each chunk's exact zone
+            # (which embeds in its own widening) or prefix zone; one chunk
+            # with neither poisons it, same rule as "mm"
+            cur["mp"] = merge_zone(cur["t"], cur["mp"], e["mp"])
+            cur["sm"] = merge_sum(cur["t"], cur["sm"], e["sm"])
+    for e in zones.values():  # poisoned/non-summable/redundant: no bytes
+        if e.get("sm") is None:
+            e.pop("sm", None)
+        if e.get("mp") is None or e.get("mm") is not None:
+            e.pop("mp", None)  # exact part zone present: widening is noise
+    # part-level blooms so a point lookup prunes whole PARTS driver-side
+    # via pruned_part_dirs/surviving_parts -- zones can't exclude unsorted
+    # high-cardinality keys, exactly the columns blooms are opted into.
+    # Preferred source: the encoder's call-level "pbf" filters (one per
+    # encode call per column, sized ~10 bits per COVERED row -- a union of
+    # chunk-sized filters saturates on multi-chunk parts). Fallback for
+    # metas from older producers: OR the chunk filters per geometry.
+    # Either way merge_groups returns None (no entry, no manifest bytes)
+    # on any gap or when a group is too saturated to ever skip.
+    from ..codecs import bloom as _bloom
+
+    for col, bfs in chunk_bfs.items():
+        src = part_bfs.get(col) or bfs
+        merged = _bloom.merge_groups(src)
+        budget = _bloom.PART_BF_MAX_BYTES
+        if merged is not None and sum(g["m"] // 8 for g in merged) <= budget:
+            zones[col]["bf"] = merged[0] if len(merged) == 1 else merged
+    # part-level NDV sketch: register-wise union of the call-level "phl"
+    # sketches (an all-null call records none and contributes no values,
+    # so merging whatever is present is exact for the part's support)
+    from ..codecs import hll as _hll
+
+    for col, hls in part_hlls.items():
+        merged_hl = _hll.merge(hls)
+        if merged_hl is not None and col in zones:
+            zones[col]["hl"] = merged_hl
+    return {
+        "rows": rows,
+        "chunks": len(set(seqs)),
+        "raw_bytes": int(sum(raw_bytes)),
+        "enc_bytes": int(sum(enc_bytes)),
+        "sha256_manifest": manifest_sha(seqs, cols, shas),
+        "codecs": sorted(codecs),
+        "zones": zones,
+    }
+
+
+def write_part(staging: str, pid: int, enc: pa.Table, first_col: str) -> dict:
+    """Write one part's encoded chunks (``_ENC_ARROW``) to
+    ``<staging>/part_id=<pid>/`` and return its lineage row: the task that
+    holds a part writes it (the reference's per-task file + TaskReport,
+    S3ParquetPageOutput.scala:61-67). Statistics only on ``col`` and
+    ``chunk_seq`` (all ``chunkscan._rg_prunable`` reads), no embedded Arrow
+    schema, dictionaries only on the small columns: pyarrow's defaults
+    store ~21% more bytes than parquet-mr. The file lands through a temp
+    name and ``os.replace``; a failed attempt removes its temp file."""
+    import os
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    enc = enc.drop_columns(["part_id"]).sort_by(
+        [("col", "ascending"), ("chunk_seq", "ascending")]
+    )
+    part_dir = os.path.join(staging, f"part_id={int(pid)}")
+    os.makedirs(part_dir, exist_ok=True)
+    tmp = os.path.join(part_dir, f".tmp-{uuid.uuid4().hex[:12]}")
+    try:
+        pq.write_table(
+            enc, tmp,
+            row_group_size=max(
+                1, _CHUNK_ROW_GROUP_BYTES * enc.num_rows // max(enc.nbytes, 1)
+            ),
+            compression="none",
+            use_dictionary=["col", "codec", "n", "chunk_seq"],
+            write_statistics=["col", "chunk_seq"],
+            store_schema=False,
+        )
+        os.replace(tmp, os.path.join(part_dir, PART_FILE))
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    cols = ("chunk_seq", "col", "meta", "payload_sha", "raw_bytes", "enc_bytes", "n")
+    return lineage_row_from_chunks(
+        *(enc.column(c).to_pylist() for c in cols), first_col
+    )
+
+
+def _staged_row(pid: int, row: dict) -> pa.RecordBatch:
+    import json
+
+    return pa.RecordBatch.from_pydict(
+        {"part_id": [int(pid)], "lineage": [json.dumps(row)]}, schema=_STAGED_ARROW
+    )
+
+
+def stage_parts(encoded: DataFrame, staging: str, first_col: str) -> DataFrame:
+    """Gather encoded chunks (``ENCODED_SCHEMA``, a part's chunks possibly
+    from many tasks) by part and write each part with :func:`write_part`.
+    Returns ``STAGED_SCHEMA`` rows, one per part, for the driver to collect:
+    no Catalyst writer job and no staging re-read. A task holds one part's
+    encoded chunks at a time."""
+    import numpy as np
+
+    def write(batches):
+        cur, pending = None, []
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            pids = b.column(0).to_numpy(zero_copy_only=False)
+            cuts = np.flatnonzero(pids[1:] != pids[:-1]) + 1
+            for s, e in zip([0, *cuts], [*cuts, len(pids)]):
+                pid = int(pids[s])
+                if pending and pid != cur:
+                    yield _staged_row(cur, write_part(
+                        staging, cur, pa.Table.from_batches(pending), first_col
+                    ))
+                    pending = []
+                cur = pid
+                pending.append(b.slice(int(s), int(e - s)))
+        if pending:
+            yield _staged_row(cur, write_part(
+                staging, cur, pa.Table.from_batches(pending), first_col
+            ))
+
+    return (
+        encoded.repartition("part_id")
+        .sortWithinPartitions("part_id", "col", "chunk_seq")
+        .mapInArrow(write, schema=STAGED_SCHEMA)
+    )
 
 
 def _resolve_policy(schema: T.StructType, policy: CodecPolicy) -> dict[str, str]:
@@ -250,13 +457,18 @@ def encode_grouped(
     policy: CodecPolicy,
     cluster_by: tuple[str, ...] = (),
     zorder: bool = False,
+    stage: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Encode a partition-planned DataFrame (must carry ``part_id``).
 
     ``cluster_by`` sorts each part's rows by the named columns before
     slicing into chunks, so those columns' per-chunk zone maps become tight
     disjoint ranges -- the sort-order/clustering-key analogue of Iceberg
-    write ordering, bought at one in-memory Arrow sort per part."""
+    write ordering, bought at one in-memory Arrow sort per part.
+
+    ``stage=(staging, first_col)``: the task already holds the whole part,
+    so it writes it (:func:`write_part`) and returns ``STAGED_SCHEMA`` rows
+    instead of the encoded chunks."""
 
     schema = T.StructType([f for f in df_with_part.schema.fields if f.name != "part_id"])
     policy.validate(schema)
@@ -274,9 +486,16 @@ def encode_grouped(
         elif cluster_by:
             data = data.sort_by([(c, "ascending") for c in cluster_by])
         eff = _effective_chunk_rows(data, chunk_rows, policy.chunk_bytes)
-        return _encode_slices(part_id, data, colmap, eff, bloom_cols=bloom_cols, ndv_cols=ndv_cols)
+        out = _encode_slices(part_id, data, colmap, eff, bloom_cols=bloom_cols, ndv_cols=ndv_cols)
+        if stage is None:
+            return out
+        return pa.Table.from_batches(
+            [_staged_row(part_id, write_part(stage[0], part_id, out, stage[1]))]
+        )
 
-    return df_with_part.groupBy("part_id").applyInArrow(enc, schema=ENCODED_SCHEMA)
+    return df_with_part.groupBy("part_id").applyInArrow(
+        enc, schema=ENCODED_SCHEMA if stage is None else STAGED_SCHEMA
+    )
 
 
 def encode_local(
@@ -476,6 +695,7 @@ def encode_direct(
     cluster_by: tuple[str, ...] = (),
     plan: tuple[list, "object"] | None = None,
     zorder: bool = False,
+    stage: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Encode a parquet-backed corpus with executor-side pyarrow scans.
 
@@ -496,6 +716,10 @@ def encode_direct(
     Columns/predicates stay with the DataFrame paths -- this entry point is
     for the full-table encode job (reference parity: the plugin encodes
     every configured column of every page, S3ParquetPageOutput.scala:24-67).
+
+    ``stage=(staging, first_col)``: a split is a whole part, so its task
+    writes it (:func:`write_part`) and returns ``STAGED_SCHEMA`` rows instead
+    of the encoded chunks -- one Python stage, no Exchange, no writer job.
     """
     if plan is not None:
         # caller (encode_parquet_job) already planned: reusing its splits
@@ -526,8 +750,9 @@ def encode_direct(
     ]
     if max_parts is not None:
         rows = rows[:max_parts]
+    out_schema = ENCODED_SCHEMA if stage is None else STAGED_SCHEMA
     if not rows:
-        return spark.createDataFrame([], ENCODED_SCHEMA)
+        return spark.createDataFrame([], out_schema)
     # ONE python stage, no repartition shuffle: parallelize slices the
     # split list round-robin across numSlices, and each task loops over its
     # splits (task-launch overhead is per-task, so fewer, fatter tasks win
@@ -565,9 +790,14 @@ def encode_direct(
                     int(part_id), t, colmap, eff, sticky=sticky,
                     bloom_cols=bloom_cols, ndv_cols=ndv_cols,
                 )
-                yield from out.to_batches()
+                if stage is None:
+                    yield from out.to_batches()
+                else:
+                    yield _staged_row(
+                        part_id, write_part(stage[0], part_id, out, stage[1])
+                    )
 
-    return split_df.mapInArrow(enc, schema=ENCODED_SCHEMA)
+    return split_df.mapInArrow(enc, schema=out_schema)
 
 
 def encode_map(df: DataFrame, policy: CodecPolicy) -> DataFrame:

@@ -1067,10 +1067,9 @@ class EncodedTableChangesReader(DataSourceReader):
 
 
 class _PartCommit(WriterCommitMessage):
-    def __init__(self, part_id: int, lineage: dict, filename: str | None = None):
+    def __init__(self, part_id: int, lineage: dict):
         self.part_id = part_id
         self.lineage = lineage
-        self.filename = filename  # the ONE file this committed attempt wrote
 
 
 class EncodedTableArrowWriter(DataSourceArrowWriter):
@@ -1174,16 +1173,15 @@ class EncodedTableArrowWriter(DataSourceArrowWriter):
 
     def write(self, iterator) -> _PartCommit:
         import time
-        import uuid
 
         import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark import TaskContext
 
         from ..operators.encode import (
             _effective_chunk_rows,
             _encode_slices,
             _resolve_policy,
+            write_part,
         )
 
         t0 = time.time()
@@ -1230,38 +1228,13 @@ class EncodedTableArrowWriter(DataSourceArrowWriter):
             outs.append(out)
         if not outs:
             return _PartCommit(pid, {})
-        enc = pa.concat_tables(outs).drop_columns(["part_id"])
-        enc = enc.sort_by([("col", "ascending"), ("chunk_seq", "ascending")])
-        part_dir = os.path.join(self._staging, f"part_id={pid}")
-        os.makedirs(part_dir, exist_ok=True)
-        rows_per_group = max(
-            1, int(4 * 1024 * 1024 * enc.num_rows // max(enc.nbytes, 1))
-        )
-        fname = f"part-{uuid.uuid4().hex[:12]}.parquet"
-        pq.write_table(
-            enc,
-            os.path.join(part_dir, fname),
-            row_group_size=rows_per_group,
-            compression="none",
-        )
-        from ..jobs import lineage_row_from_chunks
-
-        lineage = lineage_row_from_chunks(
-            enc.column("chunk_seq").to_pylist(),
-            enc.column("col").to_pylist(),
-            enc.column("meta").to_pylist(),
-            enc.column("payload_sha").to_pylist(),
-            enc.column("raw_bytes").to_pylist(),
-            enc.column("enc_bytes").to_pylist(),
-            enc.column("n").to_pylist(),
-            self._first_col,
+        lineage = write_part(
+            self._staging, pid, pa.concat_tables(outs), self._first_col
         )
         lineage["wall_s"] = round(time.time() - t0, 3)
-        return _PartCommit(pid, lineage, fname)
+        return _PartCommit(pid, lineage)
 
     def commit(self, messages) -> None:
-        import shutil
-
         from .tables import EncodedTable
 
         if self._deferred_overwrite:
@@ -1291,33 +1264,13 @@ class EncodedTableArrowWriter(DataSourceArrowWriter):
             # resumed writer can never claim these ids)
             base = table.next_part_base()
             table.note_part_extent(base + max(m.part_id for m in good))
-        lineage = {base + m.part_id: m.lineage for m in good}
-        # task-retry / speculation safety: a failed or speculative attempt
-        # may have left its own uuid-named file in a part dir; keep ONLY
-        # the file named by each part's committed message, and drop part
-        # dirs no message claims at all
-        keep = {m.part_id: m.filename for m in good}
-        for name in os.listdir(self._staging):
-            if not name.startswith("part_id="):
-                continue
-            pid = int(name.split("=", 1)[1])
-            pdir = os.path.join(self._staging, name)
-            if pid not in keep:
-                shutil.rmtree(pdir, ignore_errors=True)
-                continue
-            for f in os.listdir(pdir):
-                if f != keep[pid]:
-                    os.remove(os.path.join(pdir, f))
-        if base:
-            # remap staged dirs to the minted ids, DESCENDING so a target
-            # never collides with a not-yet-renamed smaller staged pid
-            # (base >= 1 on any non-empty table, so pid+base > pid-1)
-            for pid in sorted(keep, reverse=True):
-                os.rename(
-                    os.path.join(self._staging, f"part_id={pid}"),
-                    os.path.join(self._staging, f"part_id={base + pid}"),
-                )
-        table.commit_staging(self._staging, lineage)
+        # task-retry / speculation safety: only the committed messages'
+        # parts move, each with its one part file; a failed attempt's
+        # leftover files and unclaimed part dirs stay in staging and go with
+        # it (move_staged)
+        table.commit_staging(
+            self._staging, {m.part_id: m.lineage for m in good}, shift=base
+        )
 
     def abort(self, messages) -> None:
         import shutil

@@ -1625,16 +1625,31 @@ class EncodedTable:
                     os.path.join(self.path, name), stale_after_s
                 )
 
-    def commit_staging(self, staging_dir: str, lineage_rows: dict[int, dict]) -> None:
-        for name in sorted(os.listdir(staging_dir)):
-            if not name.startswith("part_id="):
-                continue
-            src = os.path.join(staging_dir, name)
-            dst = os.path.join(self.data_dir, name)
+    def move_staged(self, staging_dir: str, pids, shift: int = 0) -> None:
+        """Move the staged dirs ``part_id=<pid>`` of ``pids`` into data/ as
+        ``part_id=<pid + shift>``. Only each part's one file moves: a killed
+        writer attempt's ``.tmp-*`` leftover (or any other stray) is
+        dropped, never committed beside it; a staged dir not in ``pids`` is
+        left for the caller's staging cleanup."""
+        from ..operators.encode import PART_FILE
+
+        for pid in sorted(pids):
+            src = os.path.join(staging_dir, f"part_id={pid}")
+            for f in os.listdir(src):
+                if f != PART_FILE:
+                    os.remove(os.path.join(src, f))
+            dst = os.path.join(self.data_dir, f"part_id={pid + shift}")
             if os.path.exists(dst):
                 shutil.rmtree(dst)  # uncommitted leftover from a killed run
             os.rename(src, dst)
-        self._append_parts(lineage_rows)
+
+    def commit_staging(
+        self, staging_dir: str, lineage_rows: dict[int, dict], shift: int = 0
+    ) -> None:
+        """Commit the staged parts of ``lineage_rows`` (keyed by staged id)
+        as new parts ``id + shift``, then drop the staging dir."""
+        self.move_staged(staging_dir, lineage_rows, shift)
+        self._append_parts({p + shift: r for p, r in lineage_rows.items()})
         shutil.rmtree(staging_dir, ignore_errors=True)
 
     # -- read ---------------------------------------------------------------

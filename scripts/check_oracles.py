@@ -1,6 +1,9 @@
 """Local mimic of the driver's correctness gate: run every queries() entry on
 Spark and its oracle_sql() on DuckDB at a given sf dir; compare row count,
-column names, and an order-insensitive value hash.
+column names, and an order-insensitive value hash. The DuckDB result is
+hashed twice, as Python values (``fetchall``) and as fetched through
+Arrow into pandas (``.df()``), and an oracle column that is HUGEINT/DECIMAL
+where Spark's is integral fails on its own.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 """
@@ -8,6 +11,7 @@ Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
@@ -38,6 +42,57 @@ def norm_cell(v) -> str:
     return str(v)
 
 
+def pandas_rows(pdf) -> list[tuple]:
+    """Rows of a DuckDB result fetched through Arrow into pandas (``.df()``),
+    the way a pandas-reading client sees them: HUGEINT/DECIMAL columns
+    arrive as float64, so an integral 500 reads as ``500.0``."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+
+    def cell(v):
+        if v is None or v is pd.NaT or (isinstance(v, float) and math.isnan(v)):
+            return None
+        if isinstance(v, np.ndarray):
+            return [cell(x) for x in v.tolist()]
+        return v.item() if isinstance(v, np.generic) else v
+
+    return [tuple(cell(v) for v in r) for r in pdf.itertuples(index=False, name=None)]
+
+
+def spark_pandas_rows(sdf, rows: list[tuple]) -> list[tuple]:
+    """Collected Spark rows as ``toPandas`` types them: an integral column
+    holding a NULL becomes float64, the same promotion ``.df()`` applies to
+    a nullable DuckDB integer column."""
+    from pyspark.sql import types as T
+
+    floaty = [
+        isinstance(f.dataType, T.IntegralType) and any(r[i] is None for r in rows)
+        for i, f in enumerate(sdf.schema.fields)
+    ]
+    return [
+        tuple(float(v) if f and v is not None else v for v, f in zip(r, floaty))
+        for r in rows
+    ]
+
+
+def wide_integral_columns(sdf, arrow_schema) -> list[str]:
+    """Columns integral on the Spark side but HUGEINT/DECIMAL in the oracle:
+    any pandas-fetching checker hashes them as floats (``"500.0"`` vs
+    ``"500"``) even when the values agree, so the oracle must CAST them."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    spark_types = {f.name: f.dataType for f in sdf.schema.fields}
+    return sorted(
+        f.name
+        for f in arrow_schema
+        if pa.types.is_decimal(f.type)
+        and isinstance(spark_types.get(f.name), T.IntegralType)
+    )
+
+
 def value_hash(cols: list[str], rows: list[tuple]) -> str:
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     lines = sorted(
@@ -54,7 +109,8 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    # the checkout this script belongs to, wherever it is run from
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from embulk_output_s3_parquet_spark.session import get_spark
 
@@ -113,6 +169,9 @@ def main() -> int:
             res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]
             orows = res.fetchall()
+            # the same result as a pandas-reading checker fetches it
+            prows = pandas_rows(con.execute(oracles[name]).df())
+            wide = wide_integral_columns(sdf, con.execute(oracles[name]).arrow().schema)
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
@@ -120,14 +179,24 @@ def main() -> int:
         ok_n = len(srows) == len(orows)
         ok_c = sorted(scols) == sorted(ocols)
         ok_h = ok_n and ok_c and value_hash(scols, srows) == value_hash(ocols, orows)
-        status = "OK  " if (ok_n and ok_c and ok_h) else "FAIL"
+        sprows = spark_pandas_rows(sdf, srows)
+        ok_p = ok_n and ok_c and value_hash(scols, sprows) == value_hash(ocols, prows)
+        status = "OK  " if (ok_n and ok_c and ok_h and ok_p and not wide) else "FAIL"
         if status == "FAIL":
             failures.append(name)
         print(
             f"{status} {name}: rows {len(srows)}/{len(orows)} cols={'=' if ok_c else sorted(scols)}"
-            f"{'' if ok_c else sorted(ocols)} hash={'=' if ok_h else '!'}  ({time.time()-t0:.1f}s)"
+            f"{'' if ok_c else sorted(ocols)} hash={'=' if ok_h else '!'}"
+            f" pandas-hash={'=' if ok_p else '!'}  ({time.time()-t0:.1f}s)"
         )
-        if not ok_h and ok_n and ok_c and len(srows) and len(srows) < 200000:
+        if wide:
+            print(
+                f"   oracle columns {wide} are HUGEINT/DECIMAL where Spark's are "
+                "integral: CAST them AS BIGINT in oracle_sql()"
+            )
+        if ok_h and not ok_p:
+            srows, orows = sprows, prows  # show the pandas-path diff below
+        if not (ok_h and ok_p) and ok_n and ok_c and len(srows) and len(srows) < 200000:
             o_sorted = sorted(
                 "|".join(norm_cell(r[i]) for i in sorted(range(len(ocols)), key=lambda i: ocols[i]))
                 for r in orows

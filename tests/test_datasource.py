@@ -288,17 +288,16 @@ def test_writer_empty_dataframe_overwrite_safe(spark, tmp_path):
 
 
 def test_writer_commit_drops_stale_attempt_files(spark, tmp_path):
-    """Task-retry/speculation safety: commit() must keep only the ONE file
-    each part's commit message names; a dead attempt's leftover file in the
-    same staging part dir is removed, never committed as duplicate rows."""
+    """Task-retry/speculation safety: commit() must keep only each part's
+    ONE part file (operators.encode.PART_FILE); a dead attempt's leftover
+    file in the same staging part dir is removed, never committed as
+    duplicate rows."""
     import glob as _glob
     import os
     import shutil
 
-    from embulk_output_s3_parquet_spark.sources.datasource import (
-        EncodedTableArrowWriter,
-        _PartCommit,
-    )
+    from embulk_output_s3_parquet_spark.operators.encode import PART_FILE
+    from embulk_output_s3_parquet_spark.sources.datasource import EncodedTableArrowWriter
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
     path = str(tmp_path / "retry")
@@ -307,7 +306,7 @@ def test_writer_commit_drops_stale_attempt_files(spark, tmp_path):
     msg = w.write(iter(batches))
     # simulate a failed attempt's leftover: copy the real file under a new name
     pdir = os.path.join(w._staging, f"part_id={msg.part_id}")
-    real = os.path.join(pdir, msg.filename)
+    real = os.path.join(pdir, PART_FILE)
     shutil.copy(real, os.path.join(pdir, "part-deadbeefdead.parquet"))
     # and a whole part dir no message claims
     ghost = os.path.join(w._staging, "part_id=999")
@@ -320,7 +319,7 @@ def test_writer_commit_drops_stale_attempt_files(spark, tmp_path):
     assert decode_job(spark, path).count() == 50  # no duplicated rows
     assert verify_table(spark, path) == []
     files = _glob.glob(os.path.join(path, "data", "part_id=*", "*.parquet"))
-    assert len(files) == 1 and os.path.basename(files[0]) == msg.filename
+    assert len(files) == 1 and os.path.basename(files[0]) == PART_FILE
 
 
 def test_writer_cluster_by_sorts_whole_partition(spark, tmp_path):

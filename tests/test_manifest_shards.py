@@ -158,8 +158,8 @@ def test_part_bloom_mixed_geometry_groups(tmp_path):
     and the part-level probe must treat the list as may-match-any."""
     import pyarrow as pa
 
-    from embulk_output_s3_parquet_spark import jobs as J
     from embulk_output_s3_parquet_spark.codecs import bloom
+    from embulk_output_s3_parquet_spark.operators import encode as E
 
     def meta_with_bf(vals, m_bits):
         bf = bloom.build(pa.array(vals, type=pa.int64()), m_bits=m_bits)
@@ -168,7 +168,7 @@ def test_part_bloom_mixed_geometry_groups(tmp_path):
             "mm": [min(vals), max(vals)], "bf": bf,
         })
 
-    row = J.lineage_row_from_chunks(
+    row = E.lineage_row_from_chunks(
         [0, 1], ["x", "x"],
         [meta_with_bf([1, 2], 512), meta_with_bf([3, 4], 640)],
         ["s1", "s2"], [10, 10], [5, 5], [2, 2], "xx")
@@ -196,9 +196,10 @@ def test_part_bloom_byte_budget(tmp_path):
     sidecar bytes stay bounded no matter the chunk geometry."""
     import base64
 
-    from embulk_output_s3_parquet_spark import jobs as J
+    from embulk_output_s3_parquet_spark.codecs.bloom import PART_BF_MAX_BYTES
+    from embulk_output_s3_parquet_spark.operators import encode as E
 
-    m_small, m_big = 512, (J.PART_BF_MAX_BYTES + 8) * 8
+    m_small, m_big = 512, (PART_BF_MAX_BYTES + 8) * 8
 
     def meta(m_bits):
         return json.dumps({
@@ -207,10 +208,10 @@ def test_part_bloom_byte_budget(tmp_path):
                    "b": base64.b64encode(bytes((m_bits + 7) // 8)).decode()},
         })
 
-    row = J.lineage_row_from_chunks(
+    row = E.lineage_row_from_chunks(
         [0], ["x"], [meta(m_small)], ["s"], [10], [5], [1], "x")
     assert "bf" in row["zones"]["x"]
-    row = J.lineage_row_from_chunks(
+    row = E.lineage_row_from_chunks(
         [0], ["x"], [meta(m_big)], ["s"], [10], [5], [1], "x")
     assert "bf" not in row["zones"]["x"]
 

@@ -23,7 +23,7 @@ from embulk_output_s3_parquet_spark.codecs import (
     encode_array,
     meta_to_json,
 )
-from embulk_output_s3_parquet_spark.jobs import lineage_row_from_chunks
+from embulk_output_s3_parquet_spark.operators.encode import lineage_row_from_chunks
 from embulk_output_s3_parquet_spark.sources.chunkscan import (
     _conjunct_state,
     iter_part_tables,
