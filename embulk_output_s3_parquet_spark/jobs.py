@@ -61,9 +61,7 @@ def _stage_parts(
         # (measured: 0.65x-domain chunk zones vs 0.23 with co-located
         # parts). The raw-row shuffle is the same trade Delta's OPTIMIZE
         # ZORDER makes (repartition by z-range before rewriting files).
-        staged = encode_grouped(
-            dfp, policy, cluster_by=cluster, zorder=zorder, stage=stage
-        )
+        staged = encode_grouped(dfp, policy, stage, cluster_by=cluster, zorder=zorder)
     else:
         staged = stage_parts(encode_local(dfp, policy, cluster_by=cluster), *stage)
     return _collect_staged(staged, staging, t0)
@@ -1783,7 +1781,8 @@ def verify_table(spark: SparkSession, table_path: str) -> list[dict]:
     S3ParquetPageOutput.scala:61-67). Each part is audited where it sits
     (``map_units``: no shuffle), reading only ``chunk_seq``, ``col`` and
     ``payload_sha`` and hashing them with the writers' own
-    ``manifest_sha``. Returns mismatch records (empty = table verified)."""
+    ``manifest_sha`` (``files_manifest_sha``). Returns mismatch records
+    (empty = table verified)."""
     import os
 
     table = EncodedTable(table_path)
@@ -1801,20 +1800,16 @@ def verify_table(spark: SparkSession, table_path: str) -> list[dict]:
         import glob as _glob
 
         import pandas as pd
-        import pyarrow.parquet as _pq
 
-        from embulk_output_s3_parquet_spark.operators.encode import manifest_sha
+        from embulk_output_s3_parquet_spark.operators.encode import (
+            files_manifest_sha,
+        )
 
         out = []
         for pid, d in units:
-            seqs, cols, shas = [], [], []
-            for f in sorted(_glob.glob(os.path.join(d, "*.parquet"))):
-                t = _pq.read_table(f, columns=["chunk_seq", "col", "payload_sha"])
-                seqs += t.column("chunk_seq").to_pylist()
-                cols += t.column("col").to_pylist()
-                shas += t.column("payload_sha").to_pylist()
-            if seqs:  # a dir holding no chunk rows reads as missing
-                out.append((int(pid), manifest_sha(seqs, cols, shas)))
+            sha = files_manifest_sha(sorted(_glob.glob(os.path.join(d, "*.parquet"))))
+            if sha is not None:  # a dir holding no chunk rows reads as missing
+                out.append((int(pid), sha))
         yield pd.DataFrame(out, columns=["part_id", "sha"]).astype({"part_id": "int64"})
 
     got = (

@@ -10,14 +10,15 @@ per-row Python anywhere.
 Two entry points sharing one kernel:
 
 * ``encode_grouped``   -- one task per planned ``part_id`` via
-  ``groupBy(part_id).applyInArrow`` (the checkpointable job path; a group is
-  ~target_partition_bytes, the analogue of the reference's one-file-per-task).
+  ``groupBy(part_id).applyInArrow``, which writes the whole part (rows mode
+  and z-order; a group is ~target_partition_bytes, the analogue of the
+  reference's one-file-per-task).
 * ``encode_map``       -- shuffle-free ``mapInArrow`` using the physical
   partition id (for in-memory round-trips and benchmarks).
 
 Every table-writing path ends in ``write_part``: the task that holds a whole
 part writes its chunk file and returns its lineage row (``stage_parts``
-after ``encode_local``'s chunk shuffle; ``stage=`` on ``encode_grouped`` and
+after ``encode_local``'s chunk shuffle; ``encode_grouped`` and ``stage=`` on
 ``encode_direct``, whose tasks already hold whole parts).
 """
 
@@ -88,6 +89,18 @@ def manifest_sha(seqs, cols, shas) -> str:
     return hashlib.sha256(
         "".join(s for _, _, s in sorted(zip(seqs, cols, shas))).encode()
     ).hexdigest()
+
+
+def files_manifest_sha(files) -> str | None:
+    """:func:`manifest_sha` of the chunk rows stored in a part's files,
+    reading only ``chunk_seq``, ``col`` and ``payload_sha``; None when they
+    hold no chunk rows."""
+    import pyarrow.parquet as pq
+
+    keys = ["chunk_seq", "col", "payload_sha"]
+    ts = [pq.read_table(f, columns=keys) for f in files]
+    seqs, cols, shas = ([v for t in ts for v in t.column(k).to_pylist()] for k in keys)
+    return manifest_sha(seqs, cols, shas) if seqs else None
 
 
 def lineage_row_from_chunks(
@@ -189,25 +202,27 @@ def write_part(staging: str, pid: int, enc: pa.Table, first_col: str) -> dict:
     ``chunk_seq`` (all ``chunkscan._rg_prunable`` reads), no embedded Arrow
     schema, dictionaries only on the small columns: pyarrow's defaults
     store ~21% more bytes than parquet-mr. The file lands through a temp
-    name and ``os.replace``; a failed attempt removes its temp file."""
+    name and ``os.replace``; a failed attempt removes its temp file. Chunks
+    already in ``(col, chunk_seq)`` order (``stage_parts`` sorts on the JVM
+    side) are written without a second copy of the payload bytes."""
     import os
     import uuid
 
+    import numpy as np
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    enc = enc.drop_columns(["part_id"]).sort_by(
-        [("col", "ascending"), ("chunk_seq", "ascending")]
-    )
+    enc = enc.drop_columns(["part_id"])
+    order = pc.sort_indices(enc, sort_keys=[("col", "ascending"), ("chunk_seq", "ascending")])
+    if not np.array_equal(order.to_numpy(), np.arange(len(order))):
+        enc = enc.take(order)
     part_dir = os.path.join(staging, f"part_id={int(pid)}")
     os.makedirs(part_dir, exist_ok=True)
     tmp = os.path.join(part_dir, f".tmp-{uuid.uuid4().hex[:12]}")
+    rg_rows = max(1, _CHUNK_ROW_GROUP_BYTES * enc.num_rows // max(enc.nbytes, 1))
     try:
         pq.write_table(
-            enc, tmp,
-            row_group_size=max(
-                1, _CHUNK_ROW_GROUP_BYTES * enc.num_rows // max(enc.nbytes, 1)
-            ),
-            compression="none",
+            enc, tmp, row_group_size=rg_rows, compression="none",
             use_dictionary=["col", "codec", "n", "chunk_seq"],
             write_statistics=["col", "chunk_seq"],
             store_schema=False,
@@ -217,9 +232,7 @@ def write_part(staging: str, pid: int, enc: pa.Table, first_col: str) -> dict:
         if os.path.exists(tmp):
             os.remove(tmp)
     cols = ("chunk_seq", "col", "meta", "payload_sha", "raw_bytes", "enc_bytes", "n")
-    return lineage_row_from_chunks(
-        *(enc.column(c).to_pylist() for c in cols), first_col
-    )
+    return lineage_row_from_chunks(*(enc.column(c).to_pylist() for c in cols), first_col)
 
 
 def _staged_row(pid: int, row: dict) -> pa.RecordBatch:
@@ -236,28 +249,22 @@ def stage_parts(encoded: DataFrame, staging: str, first_col: str) -> DataFrame:
     Returns ``STAGED_SCHEMA`` rows, one per part, for the driver to collect:
     no Catalyst writer job and no staging re-read. A task holds one part's
     encoded chunks at a time."""
+    import itertools
+
     import numpy as np
 
-    def write(batches):
-        cur, pending = None, []
+    def slices(batches):  # (part_id, batch slice) runs, in stream order
         for b in batches:
-            if b.num_rows == 0:
-                continue
             pids = b.column(0).to_numpy(zero_copy_only=False)
             cuts = np.flatnonzero(pids[1:] != pids[:-1]) + 1
             for s, e in zip([0, *cuts], [*cuts, len(pids)]):
-                pid = int(pids[s])
-                if pending and pid != cur:
-                    yield _staged_row(cur, write_part(
-                        staging, cur, pa.Table.from_batches(pending), first_col
-                    ))
-                    pending = []
-                cur = pid
-                pending.append(b.slice(int(s), int(e - s)))
-        if pending:
-            yield _staged_row(cur, write_part(
-                staging, cur, pa.Table.from_batches(pending), first_col
-            ))
+                if e > s:
+                    yield int(pids[s]), b.slice(int(s), int(e - s))
+
+    def write(batches):
+        for pid, run in itertools.groupby(slices(batches), key=lambda x: x[0]):
+            enc = pa.Table.from_batches([b for _, b in run])
+            yield _staged_row(pid, write_part(staging, pid, enc, first_col))
 
     return (
         encoded.repartition("part_id")
@@ -455,11 +462,12 @@ def _zorder_take(data: "pa.Table", cols: tuple[str, ...]) -> "pa.Table":
 def encode_grouped(
     df_with_part: DataFrame,
     policy: CodecPolicy,
+    stage: tuple[str, str],
     cluster_by: tuple[str, ...] = (),
     zorder: bool = False,
-    stage: tuple[str, str] | None = None,
 ) -> DataFrame:
-    """Encode a partition-planned DataFrame (must carry ``part_id``).
+    """Encode and write a partition-planned DataFrame (must carry
+    ``part_id``), one whole part per ``applyInArrow`` group.
 
     ``cluster_by`` sorts each part's rows by the named columns before
     slicing into chunks, so those columns' per-chunk zone maps become tight
@@ -467,8 +475,8 @@ def encode_grouped(
     write ordering, bought at one in-memory Arrow sort per part.
 
     ``stage=(staging, first_col)``: the task already holds the whole part,
-    so it writes it (:func:`write_part`) and returns ``STAGED_SCHEMA`` rows
-    instead of the encoded chunks."""
+    so it writes it (:func:`write_part`) and returns its ``STAGED_SCHEMA``
+    row."""
 
     schema = T.StructType([f for f in df_with_part.schema.fields if f.name != "part_id"])
     policy.validate(schema)
@@ -487,15 +495,11 @@ def encode_grouped(
             data = data.sort_by([(c, "ascending") for c in cluster_by])
         eff = _effective_chunk_rows(data, chunk_rows, policy.chunk_bytes)
         out = _encode_slices(part_id, data, colmap, eff, bloom_cols=bloom_cols, ndv_cols=ndv_cols)
-        if stage is None:
-            return out
         return pa.Table.from_batches(
             [_staged_row(part_id, write_part(stage[0], part_id, out, stage[1]))]
         )
 
-    return df_with_part.groupBy("part_id").applyInArrow(
-        enc, schema=ENCODED_SCHEMA if stage is None else STAGED_SCHEMA
-    )
+    return df_with_part.groupBy("part_id").applyInArrow(enc, schema=STAGED_SCHEMA)
 
 
 def encode_local(

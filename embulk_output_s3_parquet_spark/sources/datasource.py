@@ -1235,8 +1235,20 @@ class EncodedTableArrowWriter(DataSourceArrowWriter):
         return _PartCommit(pid, lineage)
 
     def commit(self, messages) -> None:
+        from ..operators.encode import PART_FILE, files_manifest_sha
         from .tables import EncodedTable
 
+        good = [m for m in messages if m is not None and m.lineage]
+        # a late (speculative) attempt may have replaced a committed part's
+        # PART_FILE with its rows in another order: refuse before any
+        # destructive step, as the lineage no longer describes the file
+        for m in good:
+            f = os.path.join(self._staging, f"part_id={m.part_id}", PART_FILE)
+            if files_manifest_sha([f]) != m.lineage["sha256_manifest"]:
+                raise RuntimeError(
+                    f"enctable commit refused: staged part {m.part_id} no "
+                    "longer matches its committed attempt's lineage"
+                )
         if self._deferred_overwrite:
             # every task succeeded: NOW replace the old table (the only
             # destructive step, after all new data is safely staged)
@@ -1255,7 +1267,6 @@ class EncodedTableArrowWriter(DataSourceArrowWriter):
         elif self._cluster:
             if table.properties().get("write-order") != self._cluster:
                 table.set_property("write-order", self._cluster)
-        good = [m for m in messages if m is not None and m.lineage]
         base = 0
         if self._append and good:
             # mint fresh ids above the persisted high-water mark and

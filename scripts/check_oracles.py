@@ -77,19 +77,20 @@ def spark_pandas_rows(sdf, rows: list[tuple]) -> list[tuple]:
     ]
 
 
-def wide_integral_columns(sdf, arrow_schema) -> list[str]:
-    """Columns integral on the Spark side but HUGEINT/DECIMAL in the oracle:
-    any pandas-fetching checker hashes them as floats (``"500.0"`` vs
-    ``"500"``) even when the values agree, so the oracle must CAST them."""
-    import pyarrow as pa
+def wide_integral_columns(sdf, rel) -> list[str]:
+    """Columns integral on the Spark side but HUGEINT/DECIMAL in the oracle
+    (``rel``: the oracle as a DuckDB relation, whose column types are bound
+    without running it): any pandas-fetching checker hashes them as floats
+    (``"500.0"`` vs ``"500"``) even when the values agree, so the oracle
+    must CAST them."""
     from pyspark.sql import types as T
 
     spark_types = {f.name: f.dataType for f in sdf.schema.fields}
     return sorted(
-        f.name
-        for f in arrow_schema
-        if pa.types.is_decimal(f.type)
-        and isinstance(spark_types.get(f.name), T.IntegralType)
+        name
+        for name, t in zip(rel.columns, rel.types)
+        if str(t).startswith(("HUGEINT", "DECIMAL"))
+        and isinstance(spark_types.get(name), T.IntegralType)
     )
 
 
@@ -171,7 +172,7 @@ def main() -> int:
             orows = res.fetchall()
             # the same result as a pandas-reading checker fetches it
             prows = pandas_rows(con.execute(oracles[name]).df())
-            wide = wide_integral_columns(sdf, con.execute(oracles[name]).arrow().schema)
+            wide = wide_integral_columns(sdf, con.sql(oracles[name]))
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: duckdb error: {str(e)[:300]}")

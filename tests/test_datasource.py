@@ -322,6 +322,50 @@ def test_writer_commit_drops_stale_attempt_files(spark, tmp_path):
     assert len(files) == 1 and os.path.basename(files[0]) == PART_FILE
 
 
+def test_writer_commit_refuses_replaced_part_file(spark, tmp_path):
+    """Every attempt writes the same PART_FILE, so a late (speculative)
+    attempt can replace the committed attempt's file with other bytes;
+    commit() re-hashes each staged file and refuses a mismatch before the
+    deferred overwrite drops the old table."""
+    import os
+    import shutil
+
+    import pytest
+
+    from embulk_output_s3_parquet_spark.jobs import decode_job, verify_table
+    from embulk_output_s3_parquet_spark.operators.encode import PART_FILE
+    from embulk_output_s3_parquet_spark.sources.datasource import EncodedTableArrowWriter
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
+    path = str(tmp_path / "speculated")
+    batches = docs.toArrow().to_batches()
+    first = EncodedTableArrowWriter(path, docs.schema, {}, overwrite=False)
+    first.commit([first.write(iter(batches))])
+    w = EncodedTableArrowWriter(path, docs.schema, {}, overwrite=True)
+    msg = w.write(iter(batches))
+    # the other attempt saw the rows in another order
+    late = EncodedTableArrowWriter(
+        str(tmp_path / "late"), docs.schema, {}, overwrite=False
+    )
+    late.write(iter(pa_reversed(batches)))
+    shutil.copy(
+        os.path.join(late._staging, "part_id=0", PART_FILE),
+        os.path.join(w._staging, f"part_id={msg.part_id}", PART_FILE),
+    )
+    with pytest.raises(RuntimeError, match="commit refused"):
+        w.commit([msg])
+    w.abort([msg])
+    assert decode_job(spark, path).count() == 50  # the old table is intact
+    assert verify_table(spark, path) == []
+
+
+def pa_reversed(batches):
+    import pyarrow as pa
+
+    t = pa.Table.from_batches(batches)
+    return t.take(pa.array(range(t.num_rows - 1, -1, -1))).to_batches()
+
+
 def test_writer_cluster_by_sorts_whole_partition(spark, tmp_path):
     """cluster_by must sort the WHOLE partition before chunking -- chunk
     zones become disjoint ranges even when rows arrive in many batches."""

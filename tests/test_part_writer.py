@@ -78,6 +78,23 @@ def test_footer_has_pruning_stats_only_and_no_arrow_schema(tmp_path):
     )
 
 
+def test_presorted_chunks_write_the_same_file(tmp_path):
+    """Chunks that arrive in (col, chunk_seq) order (stage_parts sorts them
+    on the JVM side) are written as they are; the file and the lineage row
+    equal those of the same chunks in encoder order."""
+    enc = _encoded()
+    assert enc.column("col").to_pylist() != sorted(enc.column("col").to_pylist())
+    presorted = enc.sort_by([("col", "ascending"), ("chunk_seq", "ascending")])
+    a = E.write_part(str(tmp_path / "a"), 7, enc, "k")
+    b = E.write_part(str(tmp_path / "b"), 7, presorted, "k")
+    assert a == b
+    read = [
+        open(str(tmp_path / d / "part_id=7" / E.PART_FILE), "rb").read()
+        for d in ("a", "b")
+    ]
+    assert read[0] == read[1]
+
+
 def test_row_group_pruning_holds_on_a_written_part(tmp_path, monkeypatch):
     """chunkscan's projection and zone pruning skip whole row groups of a
     write_part file (row groups shrunk so each holds two chunks)."""
